@@ -8,9 +8,25 @@ import org.apache.spark.sql.SparkSession
   * Timing discipline: results are forced through the noop sink (full plan
   * execution including final sorts, no collect/driver materialization
   * cost), after one untimed session warmup (codegen + classloading are
-  * JVM one-offs, not per-query engine cost).
+  * JVM one-offs, not per-query engine cost). A query that throws is not
+  * timed: it goes to the `failed` list and stays out of `total`.
   */
 object Bench {
+  /** The spike-closure history among the committed `BENCH_local_*.json`
+    * file names: the highest `r<NN>` round, its `_final` file if it has
+    * one, else its last name. By name, not mtime — a fresh checkout gives
+    * every file the same mtime. */
+  def historyFile(names: Seq[String]): Option[String] = {
+    val Round = """BENCH_local_r(\d+).*\.json""".r
+    val rounds = names.collect { case n @ Round(r) => (r.toInt, n) }
+    if (rounds.isEmpty) None
+    else {
+      val top = rounds.map(_._1).max
+      Some(rounds.collect { case (`top`, n) => n }
+        .maxBy(n => (n.contains("_final"), n)))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -30,6 +46,22 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
 
+    // min over `n` runs, or None (and an entry in `failed`) if one throws
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
+    def minOf(name: String, n: Int): Option[Double] =
+      try Some((1 to n).map { _ =>
+        val t0 = System.nanoTime()
+        // queries are independent: drop persisted intermediates between
+        // runs so earlier pipelines' cache blocks don't tax later ones
+        try force(name) finally spark.catalog.clearCache()
+        (System.nanoTime() - t0) / 1e9
+      }.min)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed(name) = e
+        None
+      }
+
     // session warmup: parquet reader + codegen + shuffle machinery
     try force("q03") catch { case _: Throwable => }
 
@@ -40,18 +72,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_(n)) }
-      .map { case (name, _) =>
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try force(name) catch { case _: Throwable => () }
-        val t = (System.nanoTime() - t0) / 1e9
-        // queries are independent: drop persisted intermediates between
-        // runs so earlier pipelines' cache blocks don't tax later ones
-        spark.catalog.clearCache()
-        t
-      }
-      name -> times.min
-    }
+      .flatMap { case (name, _) => minOf(name, reps).map(name -> _) }
 
     // ---- automated spike closure (the r05/r08/r10/r11 precedents:
     // three rounds each burned a day adjudicating driver-host bench
@@ -59,15 +80,12 @@ object Bench {
     // history is re-measured min-of-5 on the spot and the verdict is
     // emitted in bench_out.json as suspect_noise — the judge reads the
     // row instead of re-deriving it. History = the newest committed
-    // BENCH_local_*.json (override: SPARK_GRAFT_BENCH_HISTORY); queries
-    // without history (new this round) are never flagged, nor is
-    // anything under a 50 ms floor (pure scheduler jitter).
-    val histPath = sys.env.get("SPARK_GRAFT_BENCH_HISTORY").orElse {
-      Option(new java.io.File(".").listFiles())
-        .map(_.filter(f => f.getName.startsWith("BENCH_local_") &&
-          f.getName.endsWith(".json")).toSeq)
-        .filter(_.nonEmpty).map(_.maxBy(_.lastModified).getPath)
-    }
+    // round's BENCH_local_*.json ([[historyFile]]; override:
+    // SPARK_GRAFT_BENCH_HISTORY); queries without history (new this
+    // round) are never flagged, nor is anything under a 50 ms floor
+    // (pure scheduler jitter).
+    val histPath = sys.env.get("SPARK_GRAFT_BENCH_HISTORY").orElse(
+      historyFile(Option(new java.io.File(".").list()).toSeq.flatten))
     val hist: Map[String, Double] = histPath.map { p =>
       try {
         val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
@@ -83,16 +101,11 @@ object Bench {
     }.getOrElse(Map.empty)
     val closed = results
       .filter { case (n, t) => hist.get(n).exists(h => h > 0.05 && t > 2 * h) }
-      .map { case (name, first) =>
-        val times = (1 to 5).map { _ =>
-          val t0 = System.nanoTime()
-          try force(name) catch { case _: Throwable => () }
-          val t = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          t
+      .flatMap { case (name, first) =>
+        minOf(name, 5).map { re =>
+          (name, hist(name), first, re,
+            if (re <= 2 * hist(name)) "noise" else "regression")
         }
-        (name, hist(name), first, times.min,
-          if (times.min <= 2 * hist(name)) "noise" else "regression")
       }
     val suspectJson = closed.map { case (n, h, f, re, v) =>
       f"""{"name":"$n","hist":$h%.3f,"first":$f%.3f,"remeasured":$re%.3f,"verdict":"$v"}"""
@@ -100,15 +113,20 @@ object Bench {
     // a closed spike reports its best measurement, not the outlier
     val finalResults = {
       val best = closed.map(c => c._1 -> math.min(c._3, c._4)).toMap
-      results.map { case (n, t) => n -> best.getOrElse(n, t) }
+      results.filterNot(r => failed.contains(r._1))
+        .map { case (n, t) => n -> best.getOrElse(n, t) }
     }
+    val failedJson = failed.map { case (n, e) =>
+      s"""{"name":"$n","error":${graft.olap.Renderer.jsonString(e.toString)}}"""
+    }.mkString("[", ",", "]")
+    val failedNames = failed.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
 
     val qs = finalResults.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = finalResults.map(_._2).sum
     // nqueries: the conformance set has grown round over round (40 -> 47
     // -> 62 -> ...); totals are only comparable per-query
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${finalResults.size},"reps":$reps,"suspect_noise":$suspectJson,"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${finalResults.size},"reps":$reps,"failed":$failedJson,"suspect_noise":$suspectJson,"queries":$qs,"sf":"$sfDir"}"""
     // Truncation-proofing: the driver captures a bounded log tail, and a
     // ~700 s sbt run's tail can eat the end of a long line (BENCH_r08 lost
     // ~130 of 203 per-query timings that way). Persist the full JSON to a
@@ -128,7 +146,7 @@ object Bench {
     val top10 = finalResults.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${finalResults.size},"reps":$reps,"suspects_closed":${closed.size},"queries":$top10,"queries_note":"top-10 slowest; full map + suspect_noise in bench_out.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${finalResults.size},"reps":$reps,"failed":$failedNames,"suspects_closed":${closed.size},"queries":$top10,"queries_note":"top-10 slowest; full map + suspect_noise in bench_out.json","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.snapshot
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,6 +29,40 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def exists(fact: String): Boolean = fs.exists(path(fact))
+
+  /** Replace a small metadata file (`_schema.json`, a tag, `_stats.json`,
+    * `_bloom.json`) in one step, so a concurrent reader opens either the
+    * old bytes or the new ones — never an empty or half-written file. The
+    * bytes are staged in a `_`-prefixed temp file beside the target (the
+    * underscore hides it from parquet listings) and renamed over it.
+    *
+    * On a checksummed store (the local FS) the file goes through the raw
+    * store with no `.crc` sidecar: the checksummed rename moves data and
+    * sidecar in two steps, and a reader pairing new bytes with the old
+    * sidecar fails its checksum. An absent sidecar skips verification, so
+    * an old one is dropped before the swap. Stores whose plain rename
+    * refuses an existing target (HDFS) replace it with FileContext's
+    * OVERWRITE rename; a rename that still fails throws. */
+  private def writeMeta(at: Path, body: String): Unit = {
+    val (f, sidecar) = fs match {
+      case c: ChecksumFileSystem => (c.getRawFileSystem, Some(c.getChecksumFile(at)))
+      case other => (other, None)
+    }
+    val tmp = new Path(at.getParent,
+      s"_${at.getName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      val out = f.create(tmp, false)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+      sidecar.foreach(f.delete(_, false))
+      if (!f.rename(tmp, at))
+        FileContext.getFileContext(f.getUri, f.getConf)
+          .rename(tmp, at, Options.Rename.OVERWRITE)
+    } catch {
+      case e: java.io.IOException =>
+        f.delete(tmp, false)
+        throw new java.io.IOException(s"could not replace $at", e)
+    }
+  }
 
   // ---------------- single-writer lease ----------------
 
@@ -235,9 +269,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     // the scan emits partition columns last regardless of schema position;
     // store in that order so read schemas equal the stored schema exactly
     val (data, part) = schema.fields.partition(_.name != "year")
-    val normalized = org.apache.spark.sql.types.StructType(data ++ part)
-    val out = fs.create(at, true)
-    try out.write(normalized.json.getBytes("UTF-8")) finally out.close()
+    writeMeta(at, org.apache.spark.sql.types.StructType(data ++ part).json)
   }
 
   /** Stored authoritative schema, if this fact has one (tables written by
@@ -730,10 +762,13 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
   private def tagPath(fact: String, name: String) =
     new Path(tagsDir(fact), s"$name.json")
 
-  private def hasTags(fact: String): Boolean = {
-    val d = tagsDir(fact)
-    fs.exists(d) && fs.listStatus(d).nonEmpty
-  }
+  /** The tag manifests, without a tag write's staged temp file. */
+  private def tagFiles(fact: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(tagsDir(fact))) Nil
+    else fs.listStatus(tagsDir(fact)).toSeq
+      .filter(_.getPath.getName.endsWith(".json"))
+
+  private def hasTags(fact: String): Boolean = tagFiles(fact).nonEmpty
 
   /** Move a displaced directory tree (year=Y dirs inside) to the fact's
     * retired area when any tag pins this fact; plain delete otherwise.
@@ -787,16 +822,12 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       .map(p => s"${p.getParent.getName}/${p.getName}")
     val schema = storedSchema(fact)
       .getOrElse(read(fact).get.schema)
-    val body = (schema.json +: files).mkString("\n")
-    val out = fs.create(tagPath(fact, name), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    writeMeta(tagPath(fact, name), (schema.json +: files).mkString("\n"))
   }
 
   /** All tag names pinned on the fact. */
   def tags(fact: String): Seq[String] =
-    if (!fs.exists(tagsDir(fact))) Nil
-    else fs.listStatus(tagsDir(fact))
-      .map(_.getPath.getName.stripSuffix(".json")).toSeq.sorted
+    tagFiles(fact).map(_.getPath.getName.stripSuffix(".json")).sorted
 
   /** Drop a pin. Retired files it alone referenced become reclaimable by
     * [[vacuumRetired]]. */
@@ -889,11 +920,8 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       nowMillis: Long = System.currentTimeMillis()): Seq[String] = {
     require(maxAgeDays >= 0, s"maxAgeDays must be >= 0, got $maxAgeDays")
     val cutoff = nowMillis - maxAgeDays * 86400000L
-    val old =
-      if (!fs.exists(tagsDir(fact))) Nil
-      else fs.listStatus(tagsDir(fact))
-        .filter(_.getModificationTime < cutoff)
-        .map(_.getPath.getName.stripSuffix(".json")).toSeq.sorted
+    val old = tagFiles(fact).filter(_.getModificationTime < cutoff)
+      .map(_.getPath.getName.stripSuffix(".json")).sorted
     old.foreach(expireTag(fact, _))
     if (old.nonEmpty) vacuumRetired(fact)
     old
@@ -971,9 +999,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       .agg(aggs.head, aggs.tail: _*)
       .select(to_json(struct(col("*"))).as("j"))
       .collect().map(_.getString(0))
-    val out = fs.create(statsPath(fact), true)
-    try out.write((keepLines ++ rows).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    writeMeta(statsPath(fact), (keepLines ++ rows).mkString("\n"))
   }
 
   private def manifestLines(fact: String): Seq[String] = {
@@ -1121,9 +1147,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       rs.foreach(r => arr(r.getInt(1)) = r.getLong(2))
       s"""{"file":"${esc(file)}","col":"${esc(column)}","bits":$bits,"k":$k,"words":[${arr.mkString(",")}]}"""
     }
-    val out = fs.create(bloomPath(fact), true)
-    try out.write((keepLines ++ lines).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    writeMeta(bloomPath(fact), (keepLines ++ lines).mkString("\n"))
   }
 
   private case class BloomEntry(file: String, col: String, bits: Int,

@@ -2,12 +2,16 @@ package graft.olap
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.time.LocalDate
+import java.time.{Duration, LocalDate}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 import graft.config.OlapConfig
-import graft.snapshot.{SnapshotJob, Warehouse}
+import graft.snapshot.{FactStore, SnapshotJob, Warehouse}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end REST front: a real socket on an ephemeral port, golden
@@ -201,6 +205,100 @@ class OlapHttpSpec extends SparkTestBase
       assert(tget("/olap/http_users/aggregate?drilldown=segment&output=table")
         ._1 == 413)
     } finally tiny.stop()
+  }
+
+  private lazy val http11 =
+    HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+
+  private def request(s: OlapHttpServer, pathAndQuery: String,
+      timeoutS: Int = 60) =
+    HttpRequest.newBuilder(URI.create(
+      s"http://127.0.0.1:${s.boundPort}$pathAndQuery"))
+      .timeout(Duration.ofSeconds(timeoutS)).GET().build()
+
+  private def workerThreads(): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("olap-http-") && t.isAlive).toSet
+
+  test("keep-alive catalog answers come without the ~40 ms send stall") {
+    // Nagle on the server socket holds the body back for the client's
+    // delayed ACK: about 42 ms on every answer, however small
+    val ms = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      val r = http11.send(request(server, "/olap/fact_tables"),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200 && r.body() == api.factTables)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = (ms(9) + ms(10)) / 2
+    assert(median < 20.0, f"median $median%.1f ms of ${ms.map(m => f"$m%.1f")}")
+  }
+
+  test("nproc x 4 concurrent aggregates answer byte-equal to sequential " +
+      "ones; stop() ends the worker threads") {
+    val queries = Seq(
+      "drilldown=segment&output=table",
+      "drilldown=segment",
+      "cut=segment%3ABUILDING&drilldown=segment",
+      "drilldown=segment&order=value%3Adesc&limit=2&output=table",
+      "measure=value")
+    val before = workerThreads()
+    val s = OlapHttpServer(api).start()
+    try {
+      def agg(q: String) = request(s, s"/olap/http_users/aggregate?$q")
+      val sequential = queries.map { q =>
+        val r = http11.send(agg(q), HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200, s"$q: ${r.body()}")
+        q -> r.body()
+      }.toMap
+      val nproc = Runtime.getRuntime.availableProcessors
+      val inFlight = (0 until nproc * 4).map { i =>
+        val q = queries(i % queries.size)
+        q -> http11.sendAsync(agg(q), HttpResponse.BodyHandlers.ofString())
+      }
+      inFlight.foreach { case (q, f) =>
+        val r = f.get(120, TimeUnit.SECONDS)
+        assert(r.statusCode() == 200 && r.body() == sequential(q), q)
+      }
+      assert((workerThreads() -- before).size == nproc)
+    } finally s.stop()
+    assert((workerThreads() -- before).isEmpty)
+  }
+
+  test("a slow request does not delay a fast one") {
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val blocking = new FactStore {
+      def read(fact: String): Option[DataFrame] = {
+        entered.countDown()
+        release.await()
+        wh.read("http_users")
+      }
+      def append(fact: String, batch: DataFrame): Unit =
+        throw new UnsupportedOperationException("read-only stub")
+    }
+    val slowApi = new OlapApi(spark, blocking,
+      Map("slow" -> OlapConfig.parseFactMeta("slow", factMetaJson)))
+    val s = OlapHttpServer(slowApi).start()
+    try {
+      val slow = http11.sendAsync(
+        request(s, "/olap/slow/aggregate?drilldown=segment&output=table"),
+        HttpResponse.BodyHandlers.ofString())
+      assert(entered.await(60, TimeUnit.SECONDS))
+      // a single-threaded server would hold this behind the blocked read
+      // until the 10 s timeout
+      val fast = http11.send(request(s, "/olap/fact_tables", timeoutS = 10),
+        HttpResponse.BodyHandlers.ofString())
+      assert(fast.statusCode() == 200 && fast.body() == slowApi.factTables)
+      assert(!slow.isDone)
+      release.countDown()
+      val r = slow.get(120, TimeUnit.SECONDS)
+      assert(r.statusCode() == 200 && r.body() == api.aggregate("http_users",
+        drilldown = Some("segment"), output = "table"))
+    } finally {
+      release.countDown()
+      s.stop()
+    }
   }
 
   test("tags route + aggregate?tag=: time travel reachable through the API") {

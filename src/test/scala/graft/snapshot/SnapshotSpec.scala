@@ -261,6 +261,29 @@ class SnapshotSpec extends SparkTestBase {
     assert(fact.count() == 2)
   }
 
+  test("schema swap is atomic: a reader looping read(fact).schema during " +
+      "30 appends sees no error") {
+    val wh = freshWarehouse()
+    def batch(i: Long) = Seq((i, s"r$i")).toDF("k", "s").withColumn("year", lit(2024L))
+    wh.append("f", batch(0))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reader = new Thread(() =>
+      while (!done.get) {
+        try { wh.read("f").get.schema; reads.incrementAndGet() }
+        catch { case e: Throwable => errors.add(e) }
+      })
+    reader.start()
+    try (1L to 30L).foreach(i => wh.append("f", batch(i)))
+    finally { done.set(true); reader.join() }
+    assert(errors.isEmpty, s"${errors.size} failed reads, first: ${errors.peek()}")
+    assert(reads.get > 30, s"only ${reads.get} reads overlapped the appends")
+    assert(wh.read("f").get.count() == 31)
+    // every staged metadata file was swapped in, none left behind
+    assert(!new java.io.File(wh.root, "f").list().exists(_.endsWith(".tmp")))
+  }
+
   test("compat mode reproduces the reference's decimal->int truncation quirk") {
     spark.sql("SELECT CAST(12.75 AS DECIMAL(10,2)) AS amount")
       .createOrReplaceTempView("dec_src")
