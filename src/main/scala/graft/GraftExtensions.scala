@@ -16,7 +16,7 @@ import graft.ext.{LanguageId, LuhnMask, MinHashSignature, PaddedNgrams,
   *   spark.sql("SELECT sign_lsh_signatures(embedding, 8, 12, 64, 42) ...")
   *
   * Register with:
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   graft.Session.builder(...).withExtensions(new GraftExtensions) ...
   * or spark.sql.extensions=graft.GraftExtensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -29,13 +29,13 @@ object Tables {
     *    columns, never stored ones. Scale-independent semantics — the
     *    exclusion changes no results, only re-evaluation count.
     *
-    * EVERY session builder in this repo (entry points, tools, the test
-    * base) must pass this to `spark.sql.optimizer.excludedRules` —
-    * a library consumer building its own SparkSession should too, or
-    * the exploding decode APIs ([[graft.ext.Multimodal.warcHttpResponses]]
-    * and friends) silently pay the duplicated decode (correct results,
-    * doubled CPU). Grep for `excludedOptimizerRules` when adding a new
-    * entry point. */
+    * [[graft.Session]] applies this to every session it builds, and
+    * every entry point, tool and test in this repo builds through it.
+    * Only an outside consumer with its own SparkSession must pass it to
+    * `spark.sql.optimizer.excludedRules` itself, or the exploding decode
+    * APIs ([[graft.ext.Multimodal.warcHttpResponses]] and friends)
+    * silently pay the duplicated decode (correct results, doubled CPU).
+    * `SessionSpec` pins the effect on x_web_extract's plan. */
   val excludedOptimizerRules: String =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 

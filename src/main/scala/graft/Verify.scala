@@ -1,26 +1,37 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  val usage = "usage: Verify <sfDir> <outDir> [name,...]"
+
+  /** `(sfDir, outDir, name filter)` from the arguments, or the message
+    * (ending in [[usage]]) to print before exiting 2. The optional 3rd
+    * argument is a comma-separated gate-name filter for the dev loop; a
+    * correctness run dumps the full set. */
+  def parseArgs(args: Seq[String], known: collection.Set[String])
+      : Either[String, (String, String, Option[Set[String]])] = args match {
+    case Seq(s, o) => Right((s, o, None))
+    case Seq(s, o, q) =>
+      val only = q.split(",").toSet
+      unknownGates(only, known).map(m => s"$m\n$usage").toLeft((s, o, Some(only)))
+    case _ => Left(usage)
+  }
+
+  /** The error naming every entry of `names` that is not a gate, listing
+    * the known ones; None when all are gates. */
+  def unknownGates(names: Iterable[String], known: collection.Set[String]): Option[String] = {
+    val unknown = names.filterNot(known).toSeq.distinct.sorted
+    if (unknown.isEmpty) None
+    else Some(s"unknown gate(s) ${unknown.mkString(", ")}; known: " +
+      known.toSeq.sorted.mkString(", "))
+  }
+
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (dev loop only —
-    // the driver always runs the full set)
-    val (sfDir, outDir, onlyArg) = args match {
-      case Array(s, o) => (s, o, None)
-      case Array(s, o, q) => (s, o, Some(q.split(",").toSet))
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Tables.excludedOptimizerRules)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (sfDir, outDir, onlyArg) =
+      parseArgs(args.toSeq, SparkEntry.queries.keySet).fold(
+        { msg => System.err.println(msg); sys.exit(2) }, identity)
+    val spark = Session.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Failures must surface as RED rows, not missing rows: a query that
     // dies in analysis gets a 1-row error-marker result (schema/hash can

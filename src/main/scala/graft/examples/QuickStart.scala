@@ -2,11 +2,10 @@ package graft.examples
 
 import java.time.LocalDate
 
+import graft.Session
 import graft.config.OlapConfig
 import graft.olap.OlapApi
 import graft.snapshot.{SnapshotJob, Warehouse}
-
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end usage example (also a smoke driver: `sbt "runMain
   * graft.examples.QuickStart"`): configure a fact from JSON, snapshot it,
@@ -14,15 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object QuickStart {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Tables.excludedOptimizerRules)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-quickstart")
 
     // 1. register source tables (any catalog/JDBC table works the same)
     graft.Tables.load(spark, "/root/testdata/sf0.001", "customer")

@@ -933,7 +933,7 @@ object Multimodal {
     *
     * SESSION REQUIREMENT: build the SparkSession with
     * `spark.sql.optimizer.excludedRules = `
-    * [[graft.Tables.excludedOptimizerRules]] (every graft entry point
+    * [[graft.Tables.excludedOptimizerRules]] ([[graft.Session]]
     * does). Without it, `InferFiltersFromGenerate` re-adds a
     * `size(g) > 0` filter below the ok-drop Generates here and in
     * [[warcHttpTexts]], re-evaluating the full HTTP/charset decode per

@@ -3,9 +3,8 @@ package graft.snapshot
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
+import graft.Session
 import graft.config.OlapConfig
-
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point mirroring the reference's
   * `php OLAP.php -c add -d YYYY-MM-DD [-f fact]` (OLAP.php:376-421,
@@ -76,14 +75,10 @@ object SnapshotCli {
 
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv.toSeq)
-    val spark = SparkSession.builder()
-      .appName("graft-snapshot")
+    val spark = Session.builder("graft-snapshot")
       // spark-submit injects spark.master; default to local outside it
       .config("spark.master",
         sys.props.getOrElse("spark.master", sys.env.getOrElse("SPARK_MASTER", "local[*]")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Tables.excludedOptimizerRules)
       .getOrCreate()
     val wh = new Warehouse(spark, args.warehouse)
     args.command match {

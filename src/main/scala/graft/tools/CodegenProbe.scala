@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
+
 import org.apache.spark.sql.functions._
 
 /** Dev tool: prove the [[graft.ext.KernelCodegen]] kernels actually
@@ -11,15 +12,9 @@ import org.apache.spark.sql.functions._
   * generated code is real, not that fallback hid a bug. */
 object CodegenProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = Session.local(Session.builder("graft-codegen-probe")
       .config("spark.sql.codegen.fallback", "false")
-      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Tables.excludedOptimizerRules)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY"), Session.envCpus)
     import spark.implicits._
 
     val docs = Seq(

@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.ext.Dedup
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev measurement probe (not part of the driver contract): recall of the
@@ -13,16 +12,7 @@ import org.apache.spark.sql.functions._
   * docs inflate bit-vote noise, hence the minhash assist tier). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("graft-probe")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Tables.excludedOptimizerRules)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-probe")
 
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val dir = s"/root/testdata/$sf"

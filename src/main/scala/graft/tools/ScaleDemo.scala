@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
+
 import org.apache.spark.sql.functions._
 
 /** Scaling evidence for the dedup + text-analysis paths (BASELINE.md):
@@ -21,18 +22,7 @@ import org.apache.spark.sql.functions._
 object ScaleDemo {
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-demo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Tables.excludedOptimizerRules)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-scale-demo")
 
     val base = graft.Tables.load(spark, "/root/testdata/sf0.1", "documents")
     val n0 = base.count()

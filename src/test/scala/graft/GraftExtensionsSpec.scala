@@ -13,13 +13,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     SparkSession.clearDefaultSession()
     // same master/parallelism as SparkTestBase: if this suite initializes
     // the JVM-wide SparkContext first, later suites inherit it unchanged
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s = Session.local(
+      Session.builder("graft-ext-test").withExtensions(new GraftExtensions), 4)
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     s
