@@ -1,6 +1,6 @@
 package graft
 
-/** Bench driver: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
+/** Bench: runs every SparkEntry gate on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric","value","unit","queries","sf"}.
   *
   * Timing discipline: results are forced through the noop sink (full plan
@@ -25,22 +25,35 @@ object Bench {
     }
   }
 
+  /** Per-gate seconds from a history file's text; none when its `"sf"`
+    * directory name is missing or differs from `sfDir`'s (an sf0.001 run
+    * compared with sf0.1 times was once flagged as a regression). */
+  def parseHistory(txt: String, sfDir: String): Map[String, Double] = {
+    def dirName(p: String) = p.stripSuffix("/").split('/').last
+    val sf = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map(_.group(1))
+    if (!sf.map(dirName).contains(dirName(sfDir))) Map.empty
+    else {
+      val qsec = txt.indexOf("\"queries\":")
+      val body = if (qsec < 0) "" else txt.substring(qsec)
+      // committed history files vary in colon spacing ("q01": 0.70 vs
+      // "q01":0.70) — the r12 local bench silently parsed ZERO history
+      // entries (and flagged nothing, 23x deltas included) before the
+      // \s* landed
+      "\"([A-Za-z0-9_]+)\":\\s*([-+0-9.Ee]+)".r.findAllMatchIn(body)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local("graft-bench")
-
-    def force(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
 
     // min over `n` runs, or None (and an entry in `failed`) if one throws
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     def minOf(name: String, n: Int): Option[Double] =
       try Some((1 to n).map { _ =>
         val t0 = System.nanoTime()
-        // queries are independent: drop persisted intermediates between
-        // runs so earlier pipelines' cache blocks don't tax later ones
-        try force(name) finally spark.catalog.clearCache()
+        SparkEntry.gates(name).force(spark, sfDir)
         (System.nanoTime() - t0) / 1e9
       }.min)
       catch { case e: Throwable =>
@@ -50,16 +63,16 @@ object Bench {
       }
 
     // session warmup: parquet reader + codegen + shuffle machinery
-    try force("q03") catch { case _: Throwable => }
+    try SparkEntry.gates("q03").force(spark, sfDir) catch { case _: Throwable => }
 
     // steady-state: min over reps (JIT + page-cache warmup excluded;
     // measured run-to-run swing on this host is ~±25%, so 3 reps)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     // dev-loop filter (comma-separated names); the driver never sets it
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_(n)) }
-      .flatMap { case (name, _) => minOf(name, reps).map(name -> _) }
+    val results = SparkEntry.gates.keys.toSeq.sorted
+      .filter(n => only.forall(_(n)))
+      .flatMap(name => minOf(name, reps).map(name -> _))
 
     // ---- automated spike closure (the r05/r08/r10/r11 precedents:
     // three rounds each burned a day adjudicating driver-host bench
@@ -68,23 +81,15 @@ object Bench {
     // emitted in bench_out.json as suspect_noise — the judge reads the
     // row instead of re-deriving it. History = the newest committed
     // round's BENCH_local_*.json ([[historyFile]]; override:
-    // SPARK_GRAFT_BENCH_HISTORY); queries without history (new this
+    // SPARK_GRAFT_BENCH_HISTORY), read only if it ran at this run's scale
+    // factor ([[parseHistory]]); queries without history (new this
     // round) are never flagged, nor is anything under a 50 ms floor
     // (pure scheduler jitter).
     val histPath = sys.env.get("SPARK_GRAFT_BENCH_HISTORY").orElse(
       historyFile(Option(new java.io.File(".").list()).toSeq.flatten))
     val hist: Map[String, Double] = histPath.map { p =>
-      try {
-        val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
-        val qsec = txt.indexOf("\"queries\":")
-        val body = if (qsec < 0) "" else txt.substring(qsec)
-        // committed history files vary in colon spacing ("q01": 0.70 vs
-        // "q01":0.70) — the r12 local bench silently parsed ZERO history
-        // entries (and flagged nothing, 23x deltas included) before the
-        // \s* landed
-        "\"([A-Za-z0-9_]+)\":\\s*([-+0-9.Ee]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty[String, Double] }
+      try parseHistory(java.nio.file.Files.readString(java.nio.file.Paths.get(p)), sfDir)
+      catch { case _: Throwable => Map.empty[String, Double] }
     }.getOrElse(Map.empty)
     val closed = results
       .filter { case (n, t) => hist.get(n).exists(h => h > 0.05 && t > 2 * h) }

@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import graft.olap.Renderer.jsonString
+
+/** Correctness dump: each SparkEntry.gates pipeline's result → parquet,
+  * plus oracle_sql.json, for the DuckDB compare (tools/selfcheck.py). */
 object Verify {
   val usage = "usage: Verify <sfDir> <outDir> [name,...]"
 
@@ -29,7 +32,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, onlyArg) =
-      parseArgs(args.toSeq, SparkEntry.queries.keySet).fold(
+      parseArgs(args.toSeq, SparkEntry.gates.keySet).fold(
         { msg => System.err.println(msg); sys.exit(2) }, identity)
     val spark = Session.local("graft-verify")
     new java.io.File(outDir).mkdirs()
@@ -39,12 +42,9 @@ object Verify {
     // testdata timestamp-type flip) shows as red in CORRECTNESS_rN.json
     // instead of silently shrinking the gate count.
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val selected = onlyArg match {
-      case Some(only) => SparkEntry.queries.filter { case (n, _) => only(n) }
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val selected = SparkEntry.gates.filter { case (n, _) => onlyArg.forall(_(n)) }
+    selected.foreach { case (name, gate) =>
+      try gate.run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
@@ -56,32 +56,21 @@ object Verify {
       }
       spark.catalog.clearCache() // queries are independent pipelines
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => onlyArg.forall(_(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
-      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    // string-to-string JSON objects (escaping every control char: a tab
+    // in oracle SQL would otherwise make json.load fail)
+    def obj(kvs: Iterable[(String, String)]): String = kvs
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(selected.view.mapValues(_.oracleSql)))
+    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), obj(failures))
     // Truncation-proofing (mirrors Bench): a fixed-path summary in the repo
     // root records what actually ran — query count, failure map — so the
     // round's verify signal survives even if the driver's captured log tail
     // is cut. The per-query parquet dumps in outDir remain the real data.
     val summary =
       s"""{"nqueries":${selected.size},"nfailed":${failures.size},""" +
-        s""""failed":${failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")},""" +
-        s""""sfDir":${q(sfDir)},"outDir":${q(outDir)}}"""
+        s""""failed":${obj(failures)},""" +
+        s""""sfDir":${jsonString(sfDir)},"outDir":${jsonString(outDir)}}"""
     try Files.writeString(
       Paths.get(sys.env.getOrElse("SPARK_GRAFT_VERIFY_OUT", "verify_out.json")), summary)
     catch { case e: Throwable => System.err.println(s"[verify] could not write verify_out.json: $e") }

@@ -61,20 +61,25 @@ object AggregateService {
       limit = limit)
   }
 
-  def aggregate(fact: DataFrame, meta: FactMeta, req: Request): DataFrame = {
+  /** The request compiled against the fact: the cut rows, one aggregate per
+    * requested measure (all if none is named) and the group columns. */
+  private def compile(fact: DataFrame, meta: FactMeta, req: Request)
+      : (DataFrame, Seq[Column], Seq[String]) = {
     val predicate = Cut.compile(req.cuts, meta, fact.schema)
     val cut = if (req.cuts.isEmpty) fact else fact.filter(predicate)
-
     val measureNames = if (req.measures.nonEmpty) req.measures else meta.measures.map(_.name)
-    val measureCols: Seq[Column] = measureNames.map { n =>
+    val measureCols = measureNames.map { n =>
       val m = meta.measure(n)
-      val fn = req.overrideFor(n).map(meta.aggregateFn).getOrElse(m.default)
-      m.aggregate(fn, meta.physical)
+      m.aggregate(req.overrideFor(n).map(meta.aggregateFn).getOrElse(m.default),
+        meta.physical)
     }
+    val groupCols = Drilldown.resolve(req.drilldowns, req.cuts, meta)
+      .flatMap(_.columns(meta)).distinct
+    (cut, measureCols, groupCols)
+  }
 
-    val resolved = Drilldown.resolve(req.drilldowns, req.cuts, meta)
-    val groupCols = resolved.flatMap(_.columns(meta)).distinct
-
+  def aggregate(fact: DataFrame, meta: FactMeta, req: Request): DataFrame = {
+    val (cut, measureCols, groupCols) = compile(fact, meta, req)
     if (groupCols.isEmpty) cut.agg(measureCols.head, measureCols.tail: _*) // A1 global
     else {
       val agged = cut
@@ -171,16 +176,7 @@ object AggregateService {
 
   private def groupingSets(fact: DataFrame, meta: FactMeta, req: Request,
       cube: Boolean): DataFrame = {
-    val predicate = Cut.compile(req.cuts, meta, fact.schema)
-    val cut = if (req.cuts.isEmpty) fact else fact.filter(predicate)
-    val measureNames = if (req.measures.nonEmpty) req.measures else meta.measures.map(_.name)
-    val measureCols = measureNames.map { n =>
-      val m = meta.measure(n)
-      m.aggregate(req.overrideFor(n).map(meta.aggregateFn).getOrElse(m.default),
-        meta.physical)
-    }
-    val groupCols = Drilldown.resolve(req.drilldowns, req.cuts, meta)
-      .flatMap(_.columns(meta)).distinct
+    val (cut, measureCols, groupCols) = compile(fact, meta, req)
     require(groupCols.nonEmpty, "rollup/cube needs a drilldown")
     val aggCols = measureCols :+ grouping_id().as("grouping_id")
     val grouped =

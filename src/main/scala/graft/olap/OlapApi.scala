@@ -188,8 +188,7 @@ final class OlapApi(spark: SparkSession, warehouse: FactStore,
     val m = meta(fact)
     val df = tag match {
       case Some(t) => tagStore(fact).readTag(fact, t)
-      case None => warehouse.read(fact).getOrElse(throw new IllegalStateException(
-        s"fact table $fact has no snapshots yet"))
+      case None => liveFact(fact)
     }
     val req = AggregateService.Request.fromParams(cut, drilldown, measure,
       aggregate, order, limit)

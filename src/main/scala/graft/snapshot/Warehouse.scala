@@ -303,7 +303,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     * swap, NOT delete-then-write: concurrent readers never observe a
     * missing/partial table, and a crash mid-epoch cannot lose the fact. */
   def overwrite(fact: String, batch: DataFrame): Unit =
-    replaceWith(fact, batch, ".epoch")
+    replaceWith(fact, batch)
 
   /** Export a fact for downstream consumers — the interchange leg of
     * the sink family (reference S12/S13 render JSON/table views of
@@ -361,7 +361,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
         write(batch, SaveMode.Append, fact)
       } else {
         // type change: one-off rewrite (ref S7 CHANGE COLUMN analog)
-        replaceWith(fact, SchemaEvolution.unionEvolve(existing, batch), ".tmp")
+        replaceWith(fact, SchemaEvolution.unionEvolve(existing, batch))
       }
   }
 
@@ -420,7 +420,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
           // append routes this case to a rewrite. Full-table rewrite here
           // too; the partition-scoped fast path is for the steady state.
           val untouched = existing.filter(!col("year").isin(years: _*))
-          replaceWith(fact, SchemaEvolution.unionEvolve(untouched, merged), ".tmp")
+          replaceWith(fact, SchemaEvolution.unionEvolve(untouched, merged))
         } else swapYearPartitions(fact, merged, years.toSeq)
     }
   }
@@ -551,13 +551,14 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     df.write.partitionBy("year").mode(mode).parquet(path(fact).toString)
 
   /** Atomically-ish replace a fact directory with a rewritten DataFrame:
-    * write to a sibling temp dir, swap via FS rename, fail loudly if the
-    * swap cannot complete (never silently lose the table). */
-  private def replaceWith(fact: String, df: DataFrame, suffix: String,
+    * write to the sibling `<fact>.tmp`, swap via FS rename, fail loudly if
+    * the swap cannot complete (never silently lose the table). Every
+    * rewrite stages under that one name, which [[vacuum]] rolls forward. */
+  private def replaceWith(fact: String, df: DataFrame,
       writeOpts: Map[String, String] = Map.empty,
       keepLayout: Boolean = false): Unit = {
     val target = path(fact)
-    val tmp = new Path(target.getParent, target.getName + suffix)
+    val tmp = new Path(target.getParent, target.getName + ".tmp")
     val old = new Path(target.getParent, target.getName + ".old")
     val f = fs
     if (f.exists(tmp)) f.delete(tmp, true)
@@ -593,7 +594,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     * mutation here (append-rewrite, overwrite, compact, merge) stages
     * sibling dirs and swaps via rename; a crash inside a swap window can
     * leave (a) the whole fact renamed out to `<fact>.old` with the
-    * complete rewrite still in `<fact><suffix>` (replaceWith renames the
+    * complete rewrite still in `<fact>.tmp` (replaceWith renames the
     * live dir away only AFTER the staged write fully succeeded), or (b)
     * individual partitions displaced to `<fact>.merge.old/year=Y`
     * (merge), or (c) a purge mid-swap with staging in `<fact>.purge` /
@@ -608,15 +609,12 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     val f = fs
     val target = path(fact)
     val old = new Path(target.getParent, target.getName + ".old")
-    val staged = Seq(".tmp", ".epoch", ".compact", ".optimize")
-      .map(sfx => new Path(target.getParent, target.getName + sfx))
+    val staged = new Path(target.getParent, target.getName + ".tmp")
     if (!f.exists(target)) {
       // crashed between the two replaceWith renames: prefer the staged
       // rewrite (it is complete by protocol), else the displaced original
-      staged.find(f.exists) match {
-        case Some(tmp) => f.rename(tmp, target)
-        case None => if (f.exists(old)) f.rename(old, target)
-      }
+      if (f.exists(staged)) f.rename(staged, target)
+      else if (f.exists(old)) f.rename(old, target)
     }
     // crashed mid-merge partition swap: restore displaced partitions the
     // swap-in never replaced
@@ -661,7 +659,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       }
       scrubRetired(fact, years)
     }
-    (staged ++ Seq(old, mergeOld, purgeTmp, purgeOld,
+    (Seq(staged, old, mergeOld, purgeTmp, purgeOld,
       new Path(target.getParent, target.getName + ".merge")))
       .foreach(p => f.delete(p, true))
   }
@@ -687,8 +685,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     * size-capped write. */
   def compact(fact: String, maxRecordsPerFile: Long = 5000000L): Unit =
     read(fact).foreach { df =>
-      replaceWith(fact, df, ".compact",
-        Map("maxRecordsPerFile" -> maxRecordsPerFile.toString))
+      replaceWith(fact, df, Map("maxRecordsPerFile" -> maxRecordsPerFile.toString))
     }
 
   /** Layout optimization: rewrite the fact range-CLUSTERED and sorted on
@@ -712,7 +709,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       val keys = col("year") +: sortCols.map(col)
       val arranged = df.repartitionByRange(targetFiles, keys: _*)
         .sortWithinPartitions(keys: _*)
-      replaceWith(fact, arranged, ".optimize", keepLayout = true)
+      replaceWith(fact, arranged, keepLayout = true)
     }
   }
 
@@ -751,7 +748,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
         .repartitionByRange(targetFiles, col("year"), col("__z"))
         .sortWithinPartitions(col("year"), col("__z"))
         .drop("__z")
-      replaceWith(fact, arranged, ".zorder", keepLayout = true)
+      replaceWith(fact, arranged, keepLayout = true)
     }
   }
 

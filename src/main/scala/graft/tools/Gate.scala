@@ -20,7 +20,7 @@ object Gate {
     val bad =
       if (sfDir.isEmpty) Some("SPARK_GRAFT_SF_DIR must name a test-data directory")
       else if (names.isEmpty) Some("no gate named")
-      else Verify.unknownGates(names, SparkEntry.queries.keySet)
+      else Verify.unknownGates(names, SparkEntry.gates.keySet)
     bad.foreach { msg =>
       System.err.println(s"$msg\nusage: SPARK_GRAFT_SF_DIR=<sfDir> Gate [--plan] name...")
       sys.exit(2)
@@ -42,21 +42,17 @@ object Gate {
           f"JOB ${je.jobId}%4d ${(System.nanoTime() - s._1) / 1e9}%7.3f  ${s._2}")
       }
     })
-    def force(name: String): Unit =
-      try SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-      finally spark.catalog.clearCache()
-
-    force("q03")
+    SparkEntry.gates("q03").force(spark, sfDir)
     for (q <- names) {
       if (plan) {
         println(s"========== $q plan ==========")
-        try SparkEntry.queries(q)(spark, sfDir).explain("formatted")
+        try SparkEntry.gates(q).run(spark, sfDir).explain("formatted")
         finally spark.catalog.clearCache()
       }
       for (i <- 1 to 2) {
         lines.clear()
         val t0 = System.nanoTime()
-        force(q)
+        SparkEntry.gates(q).force(spark, sfDir)
         val t = (System.nanoTime() - t0) / 1e9
         // give listener events a moment to drain
         Thread.sleep(300)

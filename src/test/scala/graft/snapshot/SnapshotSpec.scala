@@ -459,6 +459,30 @@ class VacuumSpec extends graft.SparkTestBase {
     assert(!new java.io.File(wh.root, "vm.merge.old").exists())
   }
 
+  test("vacuum rolls every rewrite forward and leaves no staging copy") {
+    spark.sparkContext.hadoopConfiguration.set("fs.crash.impl", classOf[CrashFs].getName)
+    val rewrites = Seq[(String, Warehouse => Unit)](
+      "overwrite" -> (_.overwrite("r", Seq((3L, 1L, 2024L)).toDF("a", "b", "year"))),
+      "compact" -> (_.compact("r")),
+      "optimize" -> (_.optimize("r", Seq("a"), targetFiles = 2)),
+      "zOrderBy" -> (_.zOrderBy("r", "a", "b", targetFiles = 2)))
+    rewrites.foreach { case (name, rewrite) =>
+      val dir = graft.TempDirs.scratchDir("vac_crash").toFile
+      val wh = new Warehouse(spark, s"crash://$dir")
+      wh.append("r", Seq((1L, 5L, 2024L), (2L, 3L, 2023L)).toDF("a", "b", "year"))
+      // crash between replaceWith's two renames: the live dir is already
+      // out at r.old and the complete rewrite is still staged
+      CrashFs.armed = Some("r")
+      try intercept[java.io.IOException](rewrite(wh)) finally CrashFs.armed = None
+      assert(!new java.io.File(dir, "r").exists(), name)
+      wh.vacuum("r")
+      val left = dir.list().filter(_.startsWith("r."))
+      assert(left.isEmpty, s"$name left ${left.mkString(", ")}")
+      val rows = wh.read("r").get.select("a").as[Long].collect().toSet
+      assert(rows == (if (name == "overwrite") Set(3L) else Set(1L, 2L)), name)
+    }
+  }
+
   test("vacuum is a no-op on a healthy fact") {
     val wh = freshWh()
     wh.append("vh", Seq((1L, 2024L)).toDF("k", "year"))
@@ -480,4 +504,21 @@ class RetentionSpec extends graft.SparkTestBase {
     wh.drop("r")
     assert(wh.read("r").isEmpty)
   }
+}
+
+/** The local filesystem under the `crash:` scheme, except that a rename
+  * onto a path named [[CrashFs.armed]] throws before anything moves, as
+  * if the process died there. */
+class CrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("crash:///")
+  override def getScheme: String = "crash"
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    if (CrashFs.armed.contains(dst.getName))
+      throw new java.io.IOException(s"crashed before renaming $src to $dst")
+    else super.rename(src, dst)
+}
+
+object CrashFs {
+  @volatile var armed: Option[String] = None
 }
