@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.DecimalType
   * float error and any engine replaying the same arithmetic agrees
   * bit-for-bit.
   *
-  * The agg table is a regular warehouse fact: year-partitioned, staged-
-  * rename swaps, vacuum-recoverable. [[appendWithAgg]] merges it
+  * The agg table is a regular warehouse fact: year-partitioned, one
+  * commit per mutation. [[appendWithAgg]] merges it
   * partition-scoped (only the batch's years rewrite — see
   * [[Warehouse.merge]]).
   *

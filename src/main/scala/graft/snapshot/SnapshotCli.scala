@@ -88,15 +88,20 @@ object SnapshotCli {
         val written = SnapshotJob.run(spark, settings, wh, args.date.get,
           onlyFact = args.fact, compat = args.compat)
         println(s"[snapshot] ${args.date.get}: wrote ${written.size} fact(s): ${written.mkString(", ")}")
-      case "delete" =>
-        val fact = args.fact.get
-        if (args.years.isEmpty) {
-          wh.drop(fact)
-          println(s"[snapshot] dropped fact $fact")
-        } else {
-          wh.dropPartitions(fact, args.years)
-          println(s"[snapshot] dropped fact $fact years ${args.years.mkString(", ")}")
-        }
+      case "delete" => println(delete(wh, args.fact.get, args.years))
     }
   }
+
+  /** `-c delete`: drop the fact, or only `years` of it, under the fact's
+    * writer lease, so it cannot interleave with a cron `-c add`. */
+  def delete(wh: Warehouse, fact: String, years: Seq[Long]): String =
+    wh.withWriterLease(fact, holder = "snapshot-delete") {
+      if (years.isEmpty) {
+        wh.drop(fact)
+        s"[snapshot] dropped fact $fact"
+      } else {
+        wh.dropPartitions(fact, years)
+        s"[snapshot] dropped fact $fact years ${years.mkString(", ")}"
+      }
+    }
 }

@@ -1,40 +1,69 @@
 package graft.snapshot
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, FileSystem, Options, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet-backed fact-table catalog: one directory per fact under `root`,
   * partitioned by `year` so date cuts prune files at the source
   * (SURVEY.md §4 "Snapshot pruning"; the reference's implicit
   * (queryId, year, month, week, day) keying, OLAP.php:166-175).
   *
-  * All filesystem operations go through the Hadoop FileSystem API so the
-  * root may live on any supported store (local, HDFS, S3A, ...), not just
-  * the local disk.
+  * Every fact has one commit log, `_log/_<v>.json`. Version `v` is a FULL
+  * snapshot of the fact: its schema, every live data file as (path under
+  * the fact dir, `year`, size, mtime) and, for an erasure, the files it
+  * erased — so a reader opens one version and replays nothing. Every
+  * mutation writes its data files under fresh names (Spark writes into a
+  * `_staging/` dir and the files are renamed into `year=Y/`), then commits
+  * `v + 1` by creating its file with create-no-overwrite. Every read
+  * resolves the newest version (or a tag's) and scans exactly its files: no
+  * data directory is listed, so a reader sees a whole batch or none of it,
+  * and a crash before the commit changes nothing a reader can see. Files a
+  * commit drops are deleted right after it unless a tag's version still
+  * references them; [[vacuum]] collects whatever else a crash leaves.
   *
-  * Appends are plain partition-local parquet writes; a widening schema
-  * change (the reference's `CHANGE COLUMN`, S7) triggers a one-off rewrite
-  * since parquet files are immutable. New nullable columns need no rewrite:
-  * the authoritative evolved schema is persisted per fact (`_schema.json`)
-  * and reads bind to it directly — no per-read footer merging — with older
-  * files null-filling the missing columns.
+  * All filesystem operations go through the Hadoop FileSystem API, so the
+  * root may live on HDFS or the local disk. Stores without an atomic
+  * create-no-overwrite (S3 before conditional PUT) are unsupported: two
+  * writers could both commit the same version there.
+  *
+  * Appends only add files. A widening schema change (the reference's
+  * `CHANGE COLUMN`, S7) triggers a one-off rewrite since parquet files are
+  * immutable; new nullable columns need none: the version carries the
+  * evolved schema, reads bind to it directly, and older files null-fill
+  * the missing columns.
   */
 final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
+  import Warehouse.{Entry, LogFileIndex, Version, mapper}
 
   private def path(fact: String) = new Path(root, fact)
 
   private def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def exists(fact: String): Boolean = fs.exists(path(fact))
+  /** True when the fact has a committed version. */
+  def exists(fact: String): Boolean = latest(fact).nonEmpty
 
-  /** Replace a small metadata file (`_schema.json`, a tag, `_stats.json`,
-    * `_bloom.json`) in one step, so a concurrent reader opens either the
-    * old bytes or the new ones — never an empty or half-written file. The
-    * bytes are staged in a `_`-prefixed temp file beside the target (the
-    * underscore hides it from parquet listings) and renamed over it.
+  private def readText(at: Path): String = {
+    val in = fs.open(at)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** Replace a small metadata file (a tag, `_stats.json`, `_bloom.json`)
+    * in one step, so a concurrent reader opens either the old bytes or the
+    * new ones — never an empty or half-written file. The bytes are staged
+    * in a `_`-prefixed temp file beside the target and renamed over it.
     *
     * On a checksummed store (the local FS) the file goes through the raw
     * store with no `.crc` sidecar: the checksummed rename moves data and
@@ -64,14 +93,49 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     }
   }
 
+  /** Create `at` holding `body`, atomic in existence AND content; false
+    * when `at` already exists. The one primitive under both the writer
+    * lease and the log commit. On the LOCAL filesystem Hadoop's
+    * create(overwrite=false) is check-then-act (two racers can both pass
+    * its exists() test) and the file is readable EMPTY before the write
+    * lands — so the body goes to a unique temp file that is HARD-LINKED
+    * into place: link(2) is atomic, fails if the destination exists, and
+    * the content is complete at link time. Elsewhere the body is staged
+    * beside the target and renamed in, which needs a store whose rename
+    * refuses an existing target atomically (HDFS). */
+  private def createExclusive(at: Path, body: Array[Byte]): Boolean = {
+    val f = fs
+    val tmpName = s".${at.getName}.${java.util.UUID.randomUUID()}.tmp"
+    if (f.getScheme == "file") {
+      val dst = java.nio.file.Paths.get(at.toUri.getPath)
+      val tmp = dst.resolveSibling(tmpName)
+      try {
+        java.nio.file.Files.write(tmp, body)
+        java.nio.file.Files.createLink(dst, tmp)
+        true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException => false
+      } finally {
+        try java.nio.file.Files.deleteIfExists(tmp)
+        catch { case _: java.io.IOException => () }
+      }
+    } else {
+      val tmp = new Path(at.getParent, tmpName)
+      val out = f.create(tmp, false)
+      try out.write(body) finally out.close()
+      try !f.exists(at) && f.rename(tmp, at)
+      finally if (f.exists(tmp)) f.delete(tmp, false)
+    }
+  }
+
   // ---------------- single-writer lease ----------------
 
   private def lockPath(fact: String) = new Path(root, s"_locks/$fact.lock")
 
   /** Acquire the exclusive writer lease for `fact`, or throw if another
-    * live writer holds it. The staged-rename protocols are crash-safe
-    * for ONE writer; two concurrent snapshot jobs on the same fact can
-    * interleave their read-check/append pairs — this lease makes the
+    * live writer holds it. A commit of a version another writer already
+    * committed throws, and two concurrent snapshot jobs on the same fact
+    * can interleave their read-check/append pairs — this lease makes the
     * single-writer assumption ENFORCED, not implicit. Mechanics: atomic
     * create-no-overwrite of a lock file (the same FS primitive every
     * store backing the warehouse provides) holding (holder, token,
@@ -100,36 +164,10 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       (s"""{"holder": ${graft.olap.Renderer.jsonString(holder)}, """ +
         s""""token": "$token", "acquired_at_ms": ${System.currentTimeMillis()}, """ +
         s""""ttl_ms": $ttlMs}""").getBytes("UTF-8")
-    // Creation must be atomic in EXISTENCE and CONTENT. On a remote
-    // store (HDFS/S3A) create-no-overwrite is server-side atomic and we
-    // use it directly. On the LOCAL filesystem Hadoop's
-    // create(overwrite=false) is check-then-act (two racers can both
-    // pass the exists() test) and the file is readable EMPTY before the
-    // write lands — so there we write the body to a token-unique temp
-    // file and HARD-LINK it into place: link(2) is atomic, fails if the
-    // destination exists, and the content is complete at link time.
+    // atomic in existence and content, on every store ([[createExclusive]])
     def tryCreate(): Boolean =
-      if (f.getScheme == "file") {
-        val dir = java.nio.file.Paths.get(lp.getParent.toUri.getPath)
-        val tmp = dir.resolve(s".${lp.getName}.$token.tmp")
-        try {
-          java.nio.file.Files.write(tmp, lockBody())
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(lp.toUri.getPath), tmp)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case _: java.io.IOException => false
-        } finally {
-          try java.nio.file.Files.deleteIfExists(tmp)
-          catch { case _: java.io.IOException => () }
-        }
-      } else
-        try {
-          val out = f.create(lp, false) // atomic create-no-overwrite
-          try out.write(lockBody()) finally out.close()
-          true
-        } catch { case _: java.io.IOException => false }
+      try createExclusive(lp, lockBody())
+      catch { case _: java.io.IOException => false }
     if (tryCreate()) return token
     // contended: break the lock ONLY if its TTL has expired
     val existing = readLock(fact)
@@ -250,60 +288,139 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     try body finally releaseWriterLease(fact, token)
   }
 
-  /** The authoritative schema file, maintained on every write. Underscore
-    * prefix = invisible to the parquet file listing (like _SUCCESS). At
-    * 100 TB this is the difference between opening ONE small JSON file per
-    * query and footer-merging every parquet file in the table
-    * (`mergeSchema` lists and reads all footers on every read). */
-  private def schemaPath(fact: String) = new Path(path(fact), "_schema.json")
+  // ---------------- commit log ----------------
 
-  /** All-nullable copy (flat schemas): appends may null-fill any column. */
-  private def allNullable(s: org.apache.spark.sql.types.StructType):
-      org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true)))
+  private def logDir(fact: String) = new Path(path(fact), "_log")
+  private def versionPath(fact: String, v: Long) = new Path(logDir(fact), s"_$v.json")
+  private val VersionFile = "_(\\d+)\\.json".r
 
-  private def storeSchema(fact: String, schema: org.apache.spark.sql.types.StructType): Unit =
-    storeSchemaAt(schemaPath(fact), schema)
+  /** Committed version numbers, ascending; None when the fact has no log. */
+  private def versions(fact: String): Option[Seq[Long]] =
+    try Some(fs.listStatus(logDir(fact)).toSeq.map(_.getPath.getName)
+      .collect { case VersionFile(v) => v.toLong }.sorted)
+    catch { case _: java.io.FileNotFoundException => None }
 
-  private def storeSchemaAt(at: Path, schema: org.apache.spark.sql.types.StructType): Unit = {
-    // the scan emits partition columns last regardless of schema position;
-    // store in that order so read schemas equal the stored schema exactly
-    val (data, part) = schema.fields.partition(_.name != "year")
-    writeMeta(at, org.apache.spark.sql.types.StructType(data ++ part).json)
+  private def readVersion(fact: String, v: Long): Version =
+    Warehouse.parseVersion(v, readText(versionPath(fact, v)))
+
+  /** The newest committed version; None for an absent fact. A directory
+    * holding data but no log was written by an older build: reading or
+    * mutating it throws until [[vacuum]] adopts it. */
+  private def latest(fact: String): Option[Version] = versions(fact) match {
+    case Some(vs) => vs.lastOption.map(readVersion(fact, _))
+    case None =>
+      if (fs.exists(path(fact)) && dataFilesUnder(path(fact)).nonEmpty)
+        throw new IllegalStateException(s"${path(fact)} holds data but no " +
+          s"_log: an older build wrote it; run vacuum(\"$fact\") to adopt it")
+      None
   }
 
-  /** Stored authoritative schema, if this fact has one (tables written by
-    * older layouts fall back to a mergeSchema read). */
-  def storedSchema(fact: String): Option[org.apache.spark.sql.types.StructType] =
-    if (!fs.exists(schemaPath(fact))) None
-    else {
-      val in = fs.open(schemaPath(fact))
-      val bytes = try in.readAllBytes() finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(new String(bytes, "UTF-8"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
+  /** Entries for the data files in the `year=` dirs under `dir` (a listing:
+    * for writes and [[vacuum]], never for reads). */
+  private def dataFilesUnder(dir: Path): Seq[Entry] = {
+    val f = fs
+    f.listStatus(dir).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("year="))
+      .flatMap { d =>
+        val y = d.getPath.getName
+        f.listStatus(d.getPath).toSeq
+          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+            !st.getPath.getName.startsWith("."))
+          .map(st => Entry(s"$y/${st.getPath.getName}", Warehouse.yearOf(y),
+            st.getLen, st.getModificationTime))
+      }
+  }
 
-  def read(fact: String): Option[DataFrame] =
-    if (!exists(fact)) None
-    else storedSchema(fact) match {
-      case Some(schema) =>
-        // explicit schema: no footer listing/merging, and the partition
-        // column (`year`) keeps its authoritative long type directly
-        Some(spark.read.schema(schema).parquet(path(fact).toString))
-      case None =>
-        val df = spark.read.option("mergeSchema", "true").parquet(path(fact).toString)
-        // partition-dir inference narrows `year` to int; restore the
-        // authoritative injected type (long) for a stable schema
-        Some(df.withColumn("year", col("year").cast("long")))
+  /** Write `df` as new data files of `fact`. Spark writes them into a fresh
+    * `_staging/` dir, and each is renamed into its `year=Y/` dir under its
+    * job-unique name. No version references them until the caller commits
+    * one, so a crash anywhere in here leaves every read unchanged. */
+  private def writeFiles(fact: String, df: DataFrame,
+      opts: Map[String, String] = Map.empty): Seq[Entry] = {
+    val f = fs
+    f.mkdirs(logDir(fact)) // marks the dir as log-managed before data lands
+    val staging = new Path(path(fact), s"_staging/${java.util.UUID.randomUUID()}")
+    df.write.partitionBy("year").options(opts).parquet(staging.toString)
+    val added = dataFilesUnder(staging)
+    added.map(_.rel.takeWhile(_ != '/')).distinct
+      .foreach(d => f.mkdirs(new Path(path(fact), d)))
+    added.foreach { e =>
+      if (!f.rename(new Path(staging, e.rel), new Path(path(fact), e.rel)))
+        throw new java.io.IOException(s"could not move ${e.rel} out of $staging")
     }
+    f.delete(staging, true)
+    added
+  }
+
+  /** Commit `files` as the version after `base` (version 0 for a new
+    * fact). Creating the version file is the commit point; it is
+    * create-no-overwrite, and a version someone else committed first
+    * throws (no retry: writers hold the writer lease). Then the files
+    * `base` had and this version dropped are deleted, except those a
+    * tag's version still references — `erased` files go even then. */
+  private def commit(fact: String, base: Option[Version], schema: StructType,
+      files: Seq[Entry], erased: Seq[String] = Nil): Unit = {
+    val v = base.fold(0L)(_.v + 1)
+    // all-nullable (appends may null-fill any column), `year` last: the
+    // scan emits partition columns last, so reads equal the stored schema
+    val (data, part) = schema.fields.map(_.copy(nullable = true))
+      .partition(_.name != "year")
+    val next = Version(v, StructType(data ++ part), files, erased)
+    fs.mkdirs(logDir(fact))
+    if (!createExclusive(versionPath(fact, v), next.json.getBytes("UTF-8")))
+      throw new IllegalStateException(
+        s"fact '$fact': version $v was committed by another writer")
+    val live = files.map(_.rel).toSet
+    val dropped = base.toSeq.flatMap(_.files.map(_.rel)).filterNot(live)
+    val pinned = if (dropped.isEmpty) Set.empty[String]
+      else taggedFiles(fact).map(_.rel).toSet
+    deleteFiles(fact, (dropped.filterNot(pinned) ++ erased).distinct, live)
+  }
+
+  private def taggedFiles(fact: String): Seq[Entry] =
+    taggedVersions(fact).toSeq.flatMap(readVersion(fact, _).files)
+
+  /** Delete data files (paths under the fact dir), then each `year=` dir
+    * they leave empty that no `live` file sits in. */
+  private def deleteFiles(fact: String, rels: Seq[String], live: Set[String]): Unit = {
+    val f = fs
+    rels.foreach(rel => f.delete(new Path(path(fact), rel), false))
+    val liveDirs = live.map(_.takeWhile(_ != '/'))
+    rels.map(_.takeWhile(_ != '/')).distinct.filterNot(liveDirs).foreach { d =>
+      val dir = new Path(path(fact), d)
+      if (f.exists(dir) && f.listStatus(dir).isEmpty) f.delete(dir, false)
+    }
+  }
+
+  /** The fact as of one version: a relation over exactly `files`. Its file
+    * index is fed by the entries, so building it lists no directory and
+    * starts no Spark job whatever the file count (`parquet(files: _*)`
+    * lists them with a distributed job above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths). */
+  private def relation(fact: String, schema: StructType, files: Seq[Entry]): DataFrame = {
+    val base = fs.makeQualified(path(fact))
+    val part = StructType(schema.filter(_.name == "year"))
+    val index = new LogFileIndex(spark, base, part, files.map { e =>
+      (new FileStatus(e.size, false, 0, 0, e.mtime, new Path(base, e.rel)), e.year)
+    })
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, part,
+      StructType(schema.filterNot(_.name == "year")), None,
+      new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  private def scan(fact: String, v: Version): DataFrame = relation(fact, v.schema, v.files)
+
+  /** Schema of the fact's newest version. */
+  def storedSchema(fact: String): Option[StructType] = latest(fact).map(_.schema)
+
+  def read(fact: String): Option[DataFrame] = latest(fact).map(scan(fact, _))
 
   /** Replace the fact's content wholesale (streaming complete-mode sink:
     * each epoch is the full recomputed state, last epoch wins — idempotent
-    * by construction under micro-batch retries). Staged write + rename
-    * swap, NOT delete-then-write: concurrent readers never observe a
-    * missing/partial table, and a crash mid-epoch cannot lose the fact. */
+    * by construction under micro-batch retries). One commit: readers see
+    * the old content or the new, never a missing or partial table. */
   def overwrite(fact: String, batch: DataFrame): Unit =
-    replaceWith(fact, batch)
+    rewrite(fact, latest(fact), batch)
 
   /** Export a fact for downstream consumers — the interchange leg of
     * the sink family (reference S12/S13 render JSON/table views of
@@ -330,38 +447,29 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
   }
 
   /** Append a batch, evolving the stored schema when needed (S5/S6/S7). */
-  def append(fact: String, batch: DataFrame): Unit = read(fact) match {
-    case None =>
-      write(batch, SaveMode.Overwrite, fact)
-      storeSchema(fact, allNullable(batch.schema))
-    case Some(existing) =>
+  def append(fact: String, batch: DataFrame): Unit = latest(fact) match {
+    case None => commit(fact, None, batch.schema, writeFiles(fact, batch))
+    case Some(v) =>
+      val existing = scan(fact, v)
       val evolved = SchemaEvolution.evolvedSchema(existing.schema, batch.schema)
       val sharedTypesIdentical = existing.schema.fields.forall { f =>
         batch.schema.fieldNames.find(_ == f.name)
           .forall(n => batch.schema(n).dataType == f.dataType)
       }
-      if (evolved == allNullable(existing.schema)) {
-        // no widening needed: align the batch to the stored schema.
-        // Schema file FIRST: identical field set, so ordering is moot for
-        // readers, and a crash between the two leaves nothing stale.
-        storeSchema(fact, evolved)
+      if (evolved == existing.schema) {
+        // no widening needed: align the batch to the stored schema
         val aligned = SchemaEvolution.unionEvolve(existing.limit(0), batch)
-        write(aligned, SaveMode.Append, fact)
+        commit(fact, Some(v), evolved, v.files ++ writeFiles(fact, aligned))
       } else if (sharedTypesIdentical
           && existing.schema.fieldNames.forall(batch.schema.fieldNames.contains)) {
         // batch only ADDS nullable columns (shared column types identical —
         // a type-widened superset must NOT land here: mixed physical types
         // across files can make the table unreadable): append as-is, older
-        // files null-fill the new columns at read time.
-        // Schema file BEFORE the data: a crash in between leaves the new
-        // column visible and all-null (harmless — appends are nullable by
-        // contract), whereas the reverse order would leave appended data
-        // invisible behind a stale schema with no error.
-        storeSchema(fact, evolved)
-        write(batch, SaveMode.Append, fact)
+        // files null-fill the new columns at read time
+        commit(fact, Some(v), evolved, v.files ++ writeFiles(fact, batch))
       } else {
         // type change: one-off rewrite (ref S7 CHANGE COLUMN analog)
-        replaceWith(fact, SchemaEvolution.unionEvolve(existing, batch))
+        rewrite(fact, Some(v), SchemaEvolution.unionEvolve(existing, batch))
       }
   }
 
@@ -371,17 +479,11 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     * guard is the whole-scope idempotency probe, OLAP.php:166-175).
     *
     * PARTITION-SCOPED: only the `year` partitions present in the batch
-    * are read, merged, and swapped — at warehouse scale a correction
-    * batch touches a handful of partitions, never the table. Each
-    * partition directory swaps via two renames (out to a sibling
-    * `<fact>.merge.old/`, then the merged copy in), so readers never
-    * observe a partial or doubled partition; a crash between the two
-    * renames leaves that one partition absent from reads but intact in
-    * the sibling dir ([[vacuum]] renames it back, or re-running the
-    * merge completes it). A shared-column TYPE change disables the fast path:
-    * widened types cannot coexist with untouched partitions' old
-    * physical files, so that case rewrites the whole fact (same rule as
-    * append).
+    * are read, merged and rewritten; one commit swaps their files, so
+    * readers never observe a partial or doubled partition. A shared-column
+    * TYPE change disables the fast path: widened types cannot coexist with
+    * untouched partitions' old physical files, so that case rewrites the
+    * whole fact (same rule as append).
     *
     * Contract: `keys` must determine `year` (a key cannot move between
     * year partitions — true for any date-scoped fact key, e.g. the
@@ -393,9 +495,10 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
   def merge(fact: String, batch: DataFrame, keys: Seq[String],
       validateKeys: Boolean = true): Unit = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    read(fact) match {
+    latest(fact) match {
       case None => append(fact, batch)
-      case Some(existing) =>
+      case Some(v) =>
+        val existing = scan(fact, v)
         // bounded collect: one value per touched partition, never data rows
         val years = batch.select(col("year").cast("long")).distinct()
           .collect().map(_.getLong(0))
@@ -417,86 +520,39 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
           // a widened column type cannot coexist with the untouched
           // partitions' old physical files under the explicit-schema read
           // (SchemaColumnConvertNotSupported at scan time) — same reason
-          // append routes this case to a rewrite. Full-table rewrite here
-          // too; the partition-scoped fast path is for the steady state.
+          // append routes this case to a rewrite
           val untouched = existing.filter(!col("year").isin(years: _*))
-          replaceWith(fact, SchemaEvolution.unionEvolve(untouched, merged))
-        } else swapYearPartitions(fact, merged, years.toSeq)
+          rewrite(fact, Some(v), SchemaEvolution.unionEvolve(untouched, merged))
+        } else replaceYears(fact, v, merged, years.toSeq)
     }
   }
 
-  /** Stage `data`'s year partitions and swap exactly `years` in by rename
-    * — the partition-scoped replace both [[merge]] and [[purgeKeys]] ride.
-    * A year in `years` with NO rows in `data` is deleted (staged out, no
-    * replacement swapped in) — purge relies on this for fully-erased
-    * partitions. Crash windows are covered by [[vacuum]]. With
-    * `retireDisplaced` (the default), displaced partitions move to the
-    * retired area when tags pin them ([[tag]]).
-    *
-    * `erasure` (purge) switches the staging names to `<fact>.purge` /
-    * `<fact>.purge.old` and records the swapped years in a marker file:
-    * displaced ERASURE partitions contain the very rows being removed, so
-    * [[vacuum]] must roll a crashed purge FORWARD from the staged purged
-    * copies — restoring the displaced copies (the merge recovery) would
-    * resurrect them. Erasure also forces displaced copies to be deleted,
-    * never retired, regardless of tags. */
-  private def swapYearPartitions(fact: String, data: DataFrame,
-      years: Seq[Long], retireDisplaced: Boolean = true,
-      erasure: Boolean = false): Unit = {
-    val target = path(fact)
-    val protocol = if (erasure) ".purge" else ".merge"
-    val tmp = new Path(target.getParent, target.getName + protocol)
-    // displaced partitions are staged in a SIBLING dir, never inside
-    // the fact dir: the read glob must not see old+new copies during
-    // the swap window (and `year=2024.old` would parse as year=null)
-    val oldRoot = new Path(target.getParent, target.getName + protocol + ".old")
-    val f = fs
-    if (f.exists(tmp)) f.delete(tmp, true)
-    if (f.exists(oldRoot)) f.delete(oldRoot, true)
-    data.repartition(col("year")).write.partitionBy("year")
-      .mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // schema AFTER the tmp write succeeds: a failed write job leaves
-    // the live table (data and schema) exactly as it was. New columns
-    // are nullable, so a crash between here and the swaps exposes at
-    // worst an all-null column — never unreadable data.
-    storeSchema(fact, allNullable(data.schema))
-    if (erasure) {
-      // marker written after the staged rewrite fully succeeded and
-      // BEFORE any rename: its presence tells vacuum exactly which years
-      // a crashed purge was swapping (a fully-erased year has no staged
-      // dir, so the year list cannot be inferred from tmp's contents)
-      val out = f.create(new Path(tmp, "_purge_years.json"), true)
-      try out.write(years.mkString("[", ",", "]").getBytes("UTF-8"))
-      finally out.close()
-    }
-    f.mkdirs(oldRoot)
-    years.foreach { y =>
-      val src = new Path(tmp, s"year=$y")
-      val dst = new Path(target, s"year=$y")
-      val old = new Path(oldRoot, s"year=$y")
-      if (f.exists(dst) && !f.rename(dst, old))
-        throw new java.io.IOException(s"could not stage out $dst")
-      if (f.exists(src) && !f.rename(src, dst)) {
-        f.rename(old, dst)
-        throw new java.io.IOException(s"could not swap in merged $dst")
-      }
-    }
-    if (retireDisplaced && !erasure) retireOrDelete(fact, oldRoot)
-    else f.delete(oldRoot, true)
-    f.delete(tmp, true)
+  /** Commit `data` in place of the files of `years` — the partition-scoped
+    * replace [[merge]] and [[purgeKeys]] ride. A year in `years` with no
+    * rows in `data` ends up empty. An `erasure` records as erased every
+    * file of those years that the fact or a tag still references: they
+    * are deleted even when pinned, and [[vacuum]] deletes them if a crash
+    * came first. */
+  private def replaceYears(fact: String, base: Version, data: DataFrame,
+      years: Seq[Long], erasure: Boolean = false): Unit = {
+    val added = writeFiles(fact, data.repartition(col("year")))
+    val inYears = (e: Entry) => e.year.exists(years.contains)
+    val erased = if (!erasure) Nil
+      else (base.files ++ taggedFiles(fact)).filter(inYears).map(_.rel).distinct
+    commit(fact, Some(base), data.schema, base.files.filterNot(inYears) ++ added,
+      erased)
   }
 
   /** Targeted erasure by business key (the GDPR/CCPA "right to be
     * forgotten" at warehouse scale): every row whose `keyCol` matches
     * `keys` is removed by rewriting ONLY the `year` partitions that
     * contain such rows — the deletion analog of [[merge]]'s
-    * partition-scoped upsert, sharing its staged-rename swap (readers
-    * never see a partial partition). Crash windows are covered by
-    * [[vacuum]], which rolls an interrupted purge FORWARD from the
-    * purge-specific staging (`<fact>.purge`/`<fact>.purge.old` + year
-    * marker) — never backward: restoring a displaced partition would
-    * resurrect the rows erasure was removing. A partition whose every
-    * row matches is deleted outright.
+    * partition-scoped upsert, committed the same way (readers never see a
+    * partial partition). The rewritten files are deleted right after the
+    * commit even when a tag pins them (erasure outranks reproducibility;
+    * such a tag then fails loudly in [[readTag]]); after a crash in
+    * between, [[vacuum]] deletes them. A partition whose every row
+    * matches is deleted outright.
     *
     * The discovery scan pushes a literal IN filter to the parquet scan,
     * so with range-clustered layout ([[optimize]]) + zone maps it reads
@@ -508,16 +564,15 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     * kept. */
   def purgeKeys(fact: String, keyCol: String, keys: Seq[Any]): Unit = {
     require(keys.nonEmpty, "purgeKeys needs at least one key")
-    read(fact).foreach { df =>
+    latest(fact).foreach { v =>
+      val df = scan(fact, v)
       val years = df.filter(col(keyCol).isin(keys: _*))
         .select(col("year").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSeq
       if (years.nonEmpty) {
         val kept = df.filter(col("year").isin(years: _*) &&
           !coalesce(col(keyCol).isin(keys: _*), lit(false)))
-        swapYearPartitions(fact, kept, years, retireDisplaced = false,
-          erasure = true)
-        scrubRetired(fact, years)
+        replaceYears(fact, v, kept, years, erasure = true)
       }
     }
   }
@@ -532,7 +587,8 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       case other => throw new IllegalArgumentException(
         s"keys must have exactly one column, got ${other.mkString(", ")}")
     }
-    read(fact).foreach { df =>
+    latest(fact).foreach { v =>
+      val df = scan(fact, v)
       val kd = keys.distinct()
       val years = df.join(kd, df(keyCol) === kd(keyName), "left_semi")
         .select(col("year").cast("long")).distinct()
@@ -540,141 +596,80 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       if (years.nonEmpty) {
         val kept = df.filter(col("year").isin(years: _*))
           .join(kd, df(keyCol) === kd(keyName), "left_anti")
-        swapYearPartitions(fact, kept, years, retireDisplaced = false,
-          erasure = true)
-        scrubRetired(fact, years)
+        replaceYears(fact, v, kept, years, erasure = true)
       }
     }
   }
 
-  private def write(df: DataFrame, mode: SaveMode, fact: String): Unit =
-    df.write.partitionBy("year").mode(mode).parquet(path(fact).toString)
-
-  /** Atomically-ish replace a fact directory with a rewritten DataFrame:
-    * write to the sibling `<fact>.tmp`, swap via FS rename, fail loudly if
-    * the swap cannot complete (never silently lose the table). Every
-    * rewrite stages under that one name, which [[vacuum]] rolls forward. */
-  private def replaceWith(fact: String, df: DataFrame,
+  /** Replace the whole fact with a rewritten DataFrame: new files, one
+    * commit, then the old files go (unless tags pin them). */
+  private def rewrite(fact: String, base: Option[Version], df: DataFrame,
       writeOpts: Map[String, String] = Map.empty,
       keepLayout: Boolean = false): Unit = {
-    val target = path(fact)
-    val tmp = new Path(target.getParent, target.getName + ".tmp")
-    val old = new Path(target.getParent, target.getName + ".old")
-    val f = fs
-    if (f.exists(tmp)) f.delete(tmp, true)
     // keepLayout: the caller pre-arranged the partitioning/ordering (e.g.
     // optimize's range clustering) — the default year repartition would
     // destroy exactly what the rewrite exists to create
     val arranged = if (keepLayout) df else df.repartition(col("year"))
-    var w = arranged.write.partitionBy("year")
-    writeOpts.foreach { case (k, v) => w = w.option(k, v) }
-    w.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // schema file STAGED INSIDE tmp: the rename below swaps data + schema
-    // as one unit, so no crash point can pair new files with a stale schema
-    storeSchemaAt(new Path(tmp, "_schema.json"), allNullable(df.schema))
-    if (f.exists(old)) f.delete(old, true)
-    if (f.exists(target) && !f.rename(target, old))
-      throw new java.io.IOException(s"could not stage out $target")
-    if (!f.rename(tmp, target)) {
-      // roll back so the table is never lost
-      f.rename(old, target)
-      throw new java.io.IOException(s"could not swap in rewritten $target")
-    }
-    // table metadata living INSIDE the fact dir (tags, retired snapshots)
-    // rides along to the rewritten tree before the old tree is retired —
-    // a rewrite must never orphan the pins
-    Seq("_tags", "_retired").foreach { meta =>
-      val src = new Path(old, meta)
-      if (f.exists(src)) f.rename(src, new Path(target, meta))
-    }
-    retireOrDelete(fact, old)
+    commit(fact, base, df.schema, writeFiles(fact, arranged, writeOpts))
   }
 
-  /** Crash recovery + janitor for the staged-rename protocols. Every
-    * mutation here (append-rewrite, overwrite, compact, merge) stages
-    * sibling dirs and swaps via rename; a crash inside a swap window can
-    * leave (a) the whole fact renamed out to `<fact>.old` with the
-    * complete rewrite still in `<fact>.tmp` (replaceWith renames the
-    * live dir away only AFTER the staged write fully succeeded), or (b)
-    * individual partitions displaced to `<fact>.merge.old/year=Y`
-    * (merge), or (c) a purge mid-swap with staging in `<fact>.purge` /
-    * `<fact>.purge.old`. vacuum restores readability — roll the staged
-    * copy in for (a), the displaced partitions back for (b), and the
-    * purge FORWARD for (c) (restoring purge-displaced partitions would
-    * resurrect erased rows) — then deletes all leftover staging. After a
-    * crashed merge, re-running the same merge batch completes it (merge
-    * is idempotent per partition). Safe to run any time; a no-op on a
-    * healthy fact. */
-  def vacuum(fact: String): Unit = {
+  /** Garbage collection, under the writer lease (so no in-flight write
+    * loses its files). In order, it deletes: every file a version still in
+    * the log lists as erased (a crash can come between an erasure's commit
+    * and its deletes); every data file and version that neither the newest
+    * version nor a tag references — what a crash before a commit or before
+    * its deletes left, and the versions superseded since; and any staging
+    * a crash left behind. Safe to run any time.
+    *
+    * A directory an older build wrote (data, no `_log`) is adopted first:
+    * version 0 is committed from its `_schema.json` and a listing of its
+    * data files. Its old tags cannot be carried over; adoption refuses
+    * while any exist. */
+  def vacuum(fact: String): Unit = if (fs.exists(path(fact)))
+    withWriterLease(fact, holder = "vacuum") {
+      val f = fs
+      if (versions(fact).isEmpty) adopt(fact)
+      val all = versions(fact).get.map(readVersion(fact, _))
+      val keep = all.lastOption.map(_.v).toSet ++ taggedVersions(fact)
+      val erased = all.flatMap(_.erased).distinct
+      val referenced = all.filter(v => keep(v.v)).flatMap(_.files.map(_.rel))
+        .toSet -- erased
+      val unreferenced = dataFilesUnder(path(fact)).map(_.rel).filterNot(referenced)
+      deleteFiles(fact, (erased ++ unreferenced).distinct, referenced)
+      f.listStatus(logDir(fact)).map(_.getPath).filter(p => p.getName match {
+        case VersionFile(v) => !keep(v.toLong)
+        case _ => true // a crashed commit's temp file
+      }).foreach(f.delete(_, false))
+      Seq("_staging", "_schema.json", "_retired")
+        .foreach(n => f.delete(new Path(path(fact), n), true))
+    }
+
+  private def adopt(fact: String): Unit = {
     val f = fs
-    val target = path(fact)
-    val old = new Path(target.getParent, target.getName + ".old")
-    val staged = new Path(target.getParent, target.getName + ".tmp")
-    if (!f.exists(target)) {
-      // crashed between the two replaceWith renames: prefer the staged
-      // rewrite (it is complete by protocol), else the displaced original
-      if (f.exists(staged)) f.rename(staged, target)
-      else if (f.exists(old)) f.rename(old, target)
-    }
-    // crashed mid-merge partition swap: restore displaced partitions the
-    // swap-in never replaced
-    val mergeOld = new Path(target.getParent, target.getName + ".merge.old")
-    if (f.exists(mergeOld)) {
-      f.listStatus(mergeOld).foreach { st =>
-        val dst = new Path(target, st.getPath.getName)
-        if (!f.exists(dst)) f.rename(st.getPath, dst)
-      }
-    }
-    // crashed mid-PURGE partition swap: roll FORWARD, never back — the
-    // displaced copies in `<fact>.purge.old` contain the very rows the
-    // purge was erasing, so the merge-style restore above would resurrect
-    // them. The marker (written only after the staged purged rewrite fully
-    // succeeded) lists the years being swapped; for each: a staged copy
-    // still present swaps in (displacing whatever is live — at that point
-    // the live dir can only be the old, un-purged copy); a year with
-    // neither a staged copy nor a displaced copy was fully-erased and not
-    // yet staged out, so its live dir still holds the purged rows — delete
-    // it. A year already swapped (displaced copy present, staged copy
-    // gone) is left as-is. No marker (crash during the staged write) means
-    // the live table was never touched: just clear the staging.
-    val purgeTmp = new Path(target.getParent, target.getName + ".purge")
-    val purgeOld = new Path(target.getParent, target.getName + ".purge.old")
-    val marker = new Path(purgeTmp, "_purge_years.json")
-    if (f.exists(marker)) {
-      val in = f.open(marker)
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      val years = txt.stripPrefix("[").stripSuffix("]").split(",")
-        .map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
-      years.foreach { y =>
-        val src = new Path(purgeTmp, s"year=$y")
-        val dst = new Path(target, s"year=$y")
-        if (f.exists(src)) {
-          if (f.exists(dst)) f.delete(dst, true)
-          if (!f.rename(src, dst))
-            throw new java.io.IOException(
-              s"vacuum: could not complete purge swap of $dst")
-        } else if (!f.exists(new Path(purgeOld, s"year=$y")) && f.exists(dst)) {
-          f.delete(dst, true)
-        }
-      }
-      scrubRetired(fact, years)
-    }
-    (Seq(staged, old, mergeOld, purgeTmp, purgeOld,
-      new Path(target.getParent, target.getName + ".merge")))
-      .foreach(p => f.delete(p, true))
+    val old = path(fact)
+    val files = dataFilesUnder(old)
+    if (files.isEmpty) { f.mkdirs(logDir(fact)); return } // nothing to adopt
+    require(!f.exists(tagsDir(fact)),
+      s"$old: tags from an older build cannot be adopted; delete ${tagsDir(fact)} first")
+    val schemaFile = new Path(old, "_schema.json")
+    require(f.exists(schemaFile), s"$old: no _log and no _schema.json to adopt")
+    val schema = DataType.fromJson(readText(schemaFile)).asInstanceOf[StructType]
+    commit(fact, None, schema, files)
   }
 
-  /** Retention: drop whole year partitions (directory deletes — zero
-    * rewrite, zero scan; the cheapest possible delete and the reason the
-    * partition key should be the retention key). The reference exposes a
-    * `delete` command at table granularity only (OLAP.php:385,393 usage);
-    * partition retention is its scale-correct refinement. */
-  def dropPartitions(fact: String, years: Seq[Long]): Unit = {
-    val f = fs
-    years.foreach { y => f.delete(new Path(path(fact), s"year=$y"), true) }
-  }
+  /** Retention: drop whole year partitions — one commit, no rewrite, no
+    * scan; the cheapest possible delete and the reason the partition key
+    * should be the retention key. The reference exposes a `delete` command
+    * at table granularity only (OLAP.php:385,393 usage); partition
+    * retention is its scale-correct refinement. Tags keep pinning the
+    * dropped files until they expire. */
+  def dropPartitions(fact: String, years: Seq[Long]): Unit =
+    latest(fact).foreach { v =>
+      val kept = v.files.filterNot(_.year.exists(years.contains))
+      if (kept.size < v.files.size) commit(fact, Some(v), v.schema, kept)
+    }
 
-  /** Drop the whole fact (the reference's `delete` analog). */
+  /** Drop the whole fact, its log and tags (the reference's `delete`). */
   def drop(fact: String): Unit = {
     fs.delete(path(fact), true)
   }
@@ -684,8 +679,9 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     * into few well-sized files. One shuffle by partition key, then a
     * size-capped write. */
   def compact(fact: String, maxRecordsPerFile: Long = 5000000L): Unit =
-    read(fact).foreach { df =>
-      replaceWith(fact, df, Map("maxRecordsPerFile" -> maxRecordsPerFile.toString))
+    latest(fact).foreach { v =>
+      rewrite(fact, Some(v), scan(fact, v),
+        Map("maxRecordsPerFile" -> maxRecordsPerFile.toString))
     }
 
   /** Layout optimization: rewrite the fact range-CLUSTERED and sorted on
@@ -698,18 +694,18 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     * 100 GB for a selective query on a non-partition column.
     *
     * `targetFiles` sizes the rewrite (total range partitions across the
-    * fact): pick fact size / healthy file size (~128-512 MB). Same staged
-    * rename + vacuum crash-window protocol as compact/merge. Sorting
-    * within files additionally tightens row-group statistics and improves
-    * run-length/dictionary encoding on the sort key. */
+    * fact): pick fact size / healthy file size (~128-512 MB). One commit,
+    * like every rewrite. Sorting within files additionally tightens
+    * row-group statistics and improves run-length/dictionary encoding on
+    * the sort key. */
   def optimize(fact: String, sortCols: Seq[String],
       targetFiles: Int = 64): Unit = {
     require(sortCols.nonEmpty, "optimize needs at least one sort column")
-    read(fact).foreach { df =>
+    latest(fact).foreach { v =>
       val keys = col("year") +: sortCols.map(col)
-      val arranged = df.repartitionByRange(targetFiles, keys: _*)
+      val arranged = scan(fact, v).repartitionByRange(targetFiles, keys: _*)
         .sortWithinPartitions(keys: _*)
-      replaceWith(fact, arranged, keepLayout = true)
+      rewrite(fact, Some(v), arranged, keepLayout = true)
     }
   }
 
@@ -722,196 +718,110 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     * makes `readRange` useful on a second dimension, where a plain
     * 1-D [[optimize]] sort leaves the other column's per-file ranges
     * spanning the whole domain. One tiny bounds aggregation to the
-    * driver; the interleave is pure codegen bit arithmetic. */
+    * driver; the interleave is pure codegen bit arithmetic. A column with
+    * no non-null value (or an empty fact) ranks every row 0, like a
+    * constant one. */
   def zOrderBy(fact: String, colA: String, colB: String,
       targetFiles: Int = 64, bitsPerDim: Int = 16): Unit = {
     require(bitsPerDim >= 1 && bitsPerDim <= 21,
       s"bitsPerDim=$bitsPerDim out of [1, 21] (2*bits must fit a long)")
-    read(fact).foreach { df =>
+    latest(fact).foreach { v =>
+      val df = scan(fact, v)
       val b = df.agg(
         min(col(colA).cast("double")), max(col(colA).cast("double")),
         min(col(colB).cast("double")), max(col(colB).cast("double"))).collect()(0)
-      val (alo, ahi, blo, bhi) =
-        (b.getDouble(0), b.getDouble(1), b.getDouble(2), b.getDouble(3))
       val top = (1L << bitsPerDim) - 1
-      def rank(c: Column, lo: Double, hi: Double): Column =
-        if (hi == lo) lit(0L)
-        else least(floor((c.cast("double") - lit(lo)) / lit(hi - lo) *
-          lit(top.toDouble + 1.0)), lit(top)).cast("long")
-      val u = rank(col(colA), alo, ahi)
-      val v = rank(col(colB), blo, bhi)
+      def rank(c: Column, i: Int): Column =
+        if (b.isNullAt(i) || b.getDouble(i) == b.getDouble(i + 1)) lit(0L)
+        else {
+          val (lo, hi) = (b.getDouble(i), b.getDouble(i + 1))
+          least(floor((c.cast("double") - lit(lo)) / lit(hi - lo) *
+            lit(top.toDouble + 1.0)), lit(top)).cast("long")
+        }
+      val u = rank(col(colA), 0)
+      val w = rank(col(colB), 2)
       val z = (0 until bitsPerDim).map { i =>
         shiftleft(shiftright(u, i).bitwiseAND(lit(1L)), 2 * i)
-          .bitwiseOR(shiftleft(shiftright(v, i).bitwiseAND(lit(1L)), 2 * i + 1))
+          .bitwiseOR(shiftleft(shiftright(w, i).bitwiseAND(lit(1L)), 2 * i + 1))
       }.reduce(_ bitwiseOR _)
       val arranged = df.withColumn("__z", z)
         .repartitionByRange(targetFiles, col("year"), col("__z"))
         .sortWithinPartitions(col("year"), col("__z"))
         .drop("__z")
-      replaceWith(fact, arranged, keepLayout = true)
+      rewrite(fact, Some(v), arranged, keepLayout = true)
     }
   }
 
   // ---------------- snapshot tags (zero-copy dataset pinning) ----------------
 
   private def tagsDir(fact: String) = new Path(path(fact), "_tags")
-  private def retiredDir(fact: String) = new Path(path(fact), "_retired")
   private def tagPath(fact: String, name: String) =
     new Path(tagsDir(fact), s"$name.json")
 
-  /** The tag manifests, without a tag write's staged temp file. */
-  private def tagFiles(fact: String): Seq[org.apache.hadoop.fs.FileStatus] =
+  /** The tag files, without a tag write's staged temp file. */
+  private def tagFiles(fact: String): Seq[FileStatus] =
     if (!fs.exists(tagsDir(fact))) Nil
     else fs.listStatus(tagsDir(fact)).toSeq
       .filter(_.getPath.getName.endsWith(".json"))
 
-  private def hasTags(fact: String): Boolean = tagFiles(fact).nonEmpty
+  private def tagVersion(at: Path): Long =
+    mapper.readTree(readText(at)).get("version").asLong()
 
-  /** Move a displaced directory tree (year=Y dirs inside) to the fact's
-    * retired area when any tag pins this fact; plain delete otherwise.
-    * One rename either way — retirement is free at write time. */
-  private def retireOrDelete(fact: String, displaced: Path): Unit = {
-    val f = fs
-    if (!f.exists(displaced)) return
-    if (!hasTags(fact)) { f.delete(displaced, true); return }
-    f.mkdirs(retiredDir(fact))
-    val dest = new Path(retiredDir(fact),
-      java.util.UUID.randomUUID().toString)
-    if (!f.rename(displaced, dest))
-      throw new java.io.IOException(s"could not retire $displaced")
-  }
+  private def taggedVersions(fact: String): Set[Long] =
+    tagFiles(fact).map(st => tagVersion(st.getPath)).toSet
 
-  /** Erasure scrub: delete retired copies of the given year partitions
-    * (purge must not leave forgotten rows alive in pinned snapshots —
-    * the legal requirement outranks reproducibility; tags referencing
-    * the scrubbed files fail loudly at [[readTag]] time). */
-  private def scrubRetired(fact: String, years: Seq[Long]): Unit = {
-    val f = fs
-    if (!f.exists(retiredDir(fact))) return
-    f.listStatus(retiredDir(fact)).filter(_.isDirectory).foreach { root =>
-      years.foreach { y =>
-        f.delete(new Path(root.getPath, s"year=$y"), true)
-      }
-    }
-  }
-
-  /** Pin the fact's CURRENT file set under a name — a zero-copy dataset
-    * snapshot (one listing + one small manifest write; no data moves).
+  /** Pin the fact's CURRENT version under a name — a zero-copy dataset
+    * snapshot (one small file holding the version number; no data moves).
     * The reproducibility primitive a training pipeline needs: record the
     * tag next to the model run, and [[readTag]] re-reads byte-identical
-    * input even after appends, compaction, layout optimization, or
-    * merges — rewrites RETIRE displaced files into `_retired/` instead
-    * of deleting them while any tag exists (same idea as Iceberg/Delta
-    * snapshot isolation, carried by plain parquet + manifests).
+    * input even after appends, compaction, layout optimization, merges
+    * or partition drops — a commit deletes no file a tag's version
+    * references (the Iceberg/Delta snapshot idea, carried by plain
+    * parquet + the commit log).
     *
-    * Lifecycle: [[expireTag]] drops the pin; [[vacuumRetired]] reclaims
-    * retired storage no remaining tag references. Out of scope by
-    * contract: [[dropPartitions]]/[[drop]] delete outright (tags break),
-    * [[purgeKeys]] scrubs retired copies of affected partitions
-    * (erasure outranks reproducibility), and a crash between a rewrite's
-    * swap and its retire step can lose pinned files ([[vacuum]] prefers
-    * table health) — all three fail loudly at read time, never
-    * silently. */
+    * Lifecycle: [[expireTag]] drops the pin and [[vacuum]] reclaims what
+    * nothing references any more. By contract [[drop]] deletes the tags
+    * with the fact, and [[purgeKeys]] deletes the erased files even when
+    * pinned (erasure outranks reproducibility) — such a tag then fails
+    * loudly at read time, never silently. */
   def tag(fact: String, name: String): Unit = {
     require(name.matches("[A-Za-z0-9._-]+"), s"bad tag name: $name")
-    require(exists(fact), s"no such fact: $fact")
-    val files = dataFiles(fact)
-      .map(p => s"${p.getParent.getName}/${p.getName}")
-    val schema = storedSchema(fact)
-      .getOrElse(read(fact).get.schema)
-    writeMeta(tagPath(fact, name), (schema.json +: files).mkString("\n"))
+    val v = latest(fact)
+    require(v.nonEmpty, s"no such fact: $fact")
+    writeMeta(tagPath(fact, name), s"""{"version": ${v.get.v}}""")
   }
 
   /** All tag names pinned on the fact. */
   def tags(fact: String): Seq[String] =
     tagFiles(fact).map(_.getPath.getName.stripSuffix(".json")).sorted
 
-  /** Drop a pin. Retired files it alone referenced become reclaimable by
-    * [[vacuumRetired]]. */
+  /** Drop a pin. Files only it referenced become garbage for [[vacuum]]. */
   def expireTag(fact: String, name: String): Unit = {
     fs.delete(tagPath(fact, name), false)
     ()
   }
 
-  private def tagContent(fact: String, name: String):
-      (org.apache.spark.sql.types.StructType, Seq[String]) = {
-    val p = tagPath(fact, name)
-    require(fs.exists(p), s"no such tag '$name' on fact '$fact'")
-    val in = fs.open(p)
-    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val lines = txt.split("\n").toSeq
-    (org.apache.spark.sql.types.DataType.fromJson(lines.head)
-      .asInstanceOf[org.apache.spark.sql.types.StructType],
-      lines.tail.filter(_.nonEmpty))
-  }
-
-  /** Read the EXACT file set a tag pinned — the dataset as it was at
+  /** Read the fact at the version a tag pinned — the dataset as it was at
     * [[tag]] time, whatever has been appended, compacted, optimized, or
-    * merged since. Files resolve live-first, then in the retired area;
-    * a file found in neither (vacuumed after expire, purged, or lost in
-    * a crash window) fails with a precise message. Driver work is
-    * manifest-scale (one path resolution per pinned file); the data
-    * read is direct parquet scans of exactly those files. */
+    * merged since. A pinned file that no longer exists (erased by a purge)
+    * fails here with a precise message. */
   def readTag(fact: String, name: String): DataFrame = {
-    val (schema, rels) = tagContent(fact, name)
-    val f = fs
-    val retiredRoots: Seq[Path] =
-      if (!f.exists(retiredDir(fact))) Nil
-      else f.listStatus(retiredDir(fact)).filter(_.isDirectory)
-        .map(_.getPath).toSeq
-    val resolved: Seq[(Long, String)] = rels.map { rel =>
-      val year = rel.takeWhile(_ != '/').stripPrefix("year=").toLong
-      val live = new Path(path(fact), rel)
-      val p =
-        if (f.exists(live)) live
-        else retiredRoots.map(r => new Path(r, rel)).find(f.exists)
-          .getOrElse(throw new java.io.IOException(
-            s"tag '$name' of fact '$fact': pinned file $rel no longer " +
-              "exists (vacuumed after expire, purged, or dropped)"))
-      (year, p.toString)
+    val at = tagPath(fact, name)
+    require(fs.exists(at), s"no such tag '$name' on fact '$fact'")
+    val v = readVersion(fact, tagVersion(at))
+    v.files.find(e => !fs.exists(new Path(path(fact), e.rel))).foreach { e =>
+      throw new java.io.IOException(s"tag '$name' of fact '$fact': pinned " +
+        s"file ${e.rel} no longer exists (purged)")
     }
-    // partition values come from the manifest, not dir inference (the
-    // retired tree nests under an underscore dir Spark would not list)
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(_.name == "year"))
-    if (resolved.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    else resolved.groupBy(_._1).toSeq.sortBy(_._1).map { case (y, fl) =>
-      spark.read.schema(dataSchema).parquet(fl.map(_._2): _*)
-        .withColumn("year", lit(y))
-    }.reduce(_ unionByName _)
+    scan(fact, v)
   }
 
-  /** Reclaim retired storage no remaining tag references (run after
-    * [[expireTag]]). Walks the retired manifest-scale listing, never
-    * reads data. */
-  def vacuumRetired(fact: String): Unit = {
-    val f = fs
-    if (!f.exists(retiredDir(fact))) return
-    val pinned: Set[String] =
-      tags(fact).flatMap(t => tagContent(fact, t)._2).toSet
-    f.listStatus(retiredDir(fact)).filter(_.isDirectory).foreach { root =>
-      f.listStatus(root.getPath).foreach { sub =>
-        if (sub.isDirectory && sub.getPath.getName.startsWith("year=")) {
-          f.listStatus(sub.getPath).foreach { st =>
-            val rel = s"${sub.getPath.getName}/${st.getPath.getName}"
-            if (!pinned.contains(rel)) f.delete(st.getPath, false)
-          }
-          if (f.listStatus(sub.getPath).isEmpty) f.delete(sub.getPath, true)
-        } else f.delete(sub.getPath, true) // _schema.json etc.: never pinned
-      }
-      if (f.listStatus(root.getPath).isEmpty) f.delete(root.getPath, true)
-    }
-    if (f.listStatus(retiredDir(fact)).isEmpty) f.delete(retiredDir(fact), true)
-  }
-
-  /** Retention-age policy over the reproducibility area — the time-based
-    * analog of [[dropPartitions]]: expire every tag whose manifest is
-    * older than `maxAgeDays` (filesystem mtime — set at [[tag]] time and
-    * never touched again), then reclaim the retired storage nothing still
-    * pins. Run it on the same janitor cadence as [[compact]]; without it
-    * a long-lived fact's `_retired/` grows monotonically as forgotten
-    * tags pin every rewrite's displaced files forever. `nowMillis` is
+  /** Retention-age policy over the reproducibility pins — the time-based
+    * analog of [[dropPartitions]]: expire every tag whose file is older
+    * than `maxAgeDays` (filesystem mtime — set at [[tag]] time and never
+    * touched again), then [[vacuum]] the storage nothing still pins. Run
+    * it on the same janitor cadence as [[compact]]; without it forgotten
+    * tags pin every rewrite's dropped files forever. `nowMillis` is
     * injectable for tests/backfills. Returns the expired tag names. */
   def expireTags(fact: String, maxAgeDays: Int,
       nowMillis: Long = System.currentTimeMillis()): Seq[String] = {
@@ -920,7 +830,7 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     val old = tagFiles(fact).filter(_.getModificationTime < cutoff)
       .map(_.getPath.getName.stripSuffix(".json")).sorted
     old.foreach(expireTag(fact, _))
-    if (old.nonEmpty) vacuumRetired(fact)
+    if (old.nonEmpty) vacuum(fact)
     old
   }
 
@@ -934,21 +844,24 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     * java.net.URI getPath would DROP the authority and silently disable
     * pruning on object stores; Hadoop Path also tolerates spaces that
     * make java.net.URI throw). Applied to BOTH the writer's
-    * input_file_name() strings and the reader's listing, so the two
+    * input_file_name() strings and the version's files, so the two
     * sides can never disagree on form. */
   private def normFile(s: String): String = {
     val u = new Path(s).toUri
     Option(u.getAuthority).getOrElse("") + u.getPath
   }
 
+  private def normFile(fact: String, e: Entry): String =
+    normFile(new Path(path(fact), e.rel).toString)
+
   /** Build/refresh the fact's zone map: per-FILE min/max of `cols`,
     * persisted as one small JSON-lines manifest (`_stats.json`, underscore
     * = invisible to parquet listings). This is what makes a selective
     * predicate on a NON-partition column skip files without touching
     * them: parquet footers already carry these ranges, but Spark must
-    * still list and open every footer to use them — at 100 TB that is
-    * millions of S3 reads before the first data byte. The manifest costs
-    * one aggregation scan to build (run it after [[optimize]], whose
+    * still open every footer to use them — at 100 TB that is millions of
+    * S3 reads before the first data byte. The manifest costs one
+    * aggregation scan to build (run it after [[optimize]], whose
     * range-clustering makes the per-file ranges disjoint and the skipping
     * sharp) and one small-file read per query to use — the same
     * manifest-statistics idea Iceberg/Delta attach to their commit logs.
@@ -959,39 +872,47 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     read(fact).foreach(df => writeStats(fact, df, cols, Nil))
   }
 
-  /** Incremental manifest refresh after appends: scan ONLY the data
-    * files the manifest does not cover yet and merge their rows in —
-    * the daily-append cadence never re-reads the settled bulk of the
-    * fact. Entries for files a rewrite (compact/optimize/merge) removed
-    * are harmless — pruning intersects the manifest with the CURRENT
-    * listing — and a rewrite makes every file new, so the refresh
-    * naturally degrades to a full rebuild. Falls back to a full rebuild
-    * when the manifest is absent or covers different columns. */
+  /** Incremental manifest refresh after appends: scan ONLY the live files
+    * the manifest does not cover yet and merge their rows in — the
+    * daily-append cadence never re-reads the settled bulk of the fact.
+    * Entries of files the fact no longer has (a rewrite dropped them) are
+    * dropped, so the manifest stays one line per live file; a rewrite
+    * makes every file new, so the refresh after it is a full rebuild.
+    * Falls back to a full rebuild when the manifest is absent or covers
+    * different columns. */
   def refreshStats(fact: String, cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "refreshStats needs at least one column")
     if (!fs.exists(statsPath(fact))) { collectStats(fact, cols); return }
-    val oldLines = manifestLines(fact)
-    val stats = parseManifest(oldLines)
+    val stats = parseManifest(manifestLines(statsPath(fact)))
     val covered = ("file" +: cols.flatMap(c => Seq(s"min_$c", s"max_$c")))
       .forall(stats.schema.fieldNames.contains)
     if (!covered) { collectStats(fact, cols); return }
-    val known = stats.select(col("file")).collect()
-      .map(r => normFile(r.getString(0))).toSet
-    val newFiles = dataFiles(fact).map(_.toString)
-      .filterNot(p => known.contains(normFile(p)))
-    if (newFiles.isEmpty) return
-    val reader = spark.read.option("basePath", path(fact).toString)
-    val df = storedSchema(fact).map(reader.schema).getOrElse(reader)
-      .parquet(newFiles: _*)
-    writeStats(fact, df, cols, oldLines)
+    refreshManifest(fact, statsPath(fact))(writeStats(fact, _, cols, _))
   }
+
+  /** The shared half of [[refreshStats]] and [[refreshBloom]]: keep the
+    * manifest lines of live files, and hand the live files no line covers
+    * (as one relation) to `write` with the kept lines. A no-op when every
+    * line is live and every live file covered. */
+  private def refreshManifest(fact: String, at: Path)(
+      write: (DataFrame, Seq[String]) => Unit): Unit =
+    latest(fact).foreach { v =>
+      val lines = manifestLines(at)
+      val live = v.files.map(normFile(fact, _)).toSet
+      val kept = lines.filter(l =>
+        live.contains(normFile(mapper.readTree(l).get("file").asText())))
+      val known = kept.map(l => normFile(mapper.readTree(l).get("file").asText())).toSet
+      val fresh = v.files.filterNot(e => known.contains(normFile(fact, e)))
+      if (fresh.nonEmpty || kept.size < lines.size)
+        write(relation(fact, v.schema, fresh), kept)
+    }
 
   private def writeStats(fact: String, df: DataFrame, cols: Seq[String],
       keepLines: Seq[String]): Unit = {
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     // file keys stay RAW here; normFile canonicalizes both the
-    // manifest values and the listing at read time, one code path
+    // manifest values and the version's files at read time
     val rows = df.groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .select(to_json(struct(col("*"))).as("j"))
@@ -999,26 +920,12 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     writeMeta(statsPath(fact), (keepLines ++ rows).mkString("\n"))
   }
 
-  private def manifestLines(fact: String): Seq[String] = {
-    val in = fs.open(statsPath(fact))
-    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    txt.split("\n").toSeq.filter(_.nonEmpty)
-  }
+  private def manifestLines(at: Path): Seq[String] =
+    readText(at).split("\n").toSeq.filter(_.nonEmpty)
 
   private def parseManifest(lines: Seq[String]): DataFrame = {
     import spark.implicits._
     spark.read.json(spark.createDataset(lines))
-  }
-
-  /** All current data files of the fact (partition dirs only). */
-  private def dataFiles(fact: String): Seq[Path] = {
-    val f = fs
-    f.listStatus(path(fact)).filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("year="))
-      .flatMap(d => f.listStatus(d.getPath)).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath)
   }
 
   /** Read the fact restricted to `lo <= column <= hi`, skipping every
@@ -1026,45 +933,42 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
     * stale stats: files newer than the manifest (or with null ranges)
     * have no entry and are always read, and the row-level predicate is
     * re-applied after the file-level skip — stats can only remove
-    * provably-empty scans, never rows. Falls back to a plain filtered
-    * read when no manifest exists. */
+    * provably-empty scans, never rows. A plain filtered read when no
+    * manifest exists. */
   def readRange(fact: String, column: String, lo: Any, hi: Any): Option[DataFrame] =
-    read(fact).map { full =>
-      val pred = col(column) >= lit(lo) && col(column) <= lit(hi)
-      if (!fs.exists(statsPath(fact))) full.filter(pred)
-      else filesForRange(fact, column, lo, hi) match {
-        case Nil => full.filter(pred).limit(0)
-        case files =>
-          val reader = spark.read.option("basePath", path(fact).toString)
-          storedSchema(fact).map(reader.schema).getOrElse(reader)
-            .parquet(files: _*).filter(pred)
-      }
-    }
+    prunedRead(fact, col(column) >= lit(lo) && col(column) <= lit(hi),
+      v => inRanges(fact, v.files, column, Seq(lo -> hi)))
 
   /** Files a [[readRange]] over the interval would scan (also the
-    * observability hook the pruning specs assert against): every current
+    * observability hook the pruning specs assert against): every live
     * data file EXCEPT those whose manifest range is provably disjoint
     * from [lo, hi] — unlisted (newer-than-manifest) and null-range files
     * always survive. */
   def filesForRange(fact: String, column: String, lo: Any, hi: Any): Seq[String] =
-    if (!fs.exists(statsPath(fact))) dataFiles(fact).map(_.toString)
+    survivors(fact)(v => inRanges(fact, v.files, column, Seq(lo -> hi)))
+
+  /** The `files` the zone map cannot prove disjoint from EVERY one of
+    * `ranges`; all of them when no manifest covers `column`. */
+  private def inRanges(fact: String, files: Seq[Entry], column: String,
+      ranges: Seq[(Any, Any)]): Seq[Entry] =
+    if (!fs.exists(statsPath(fact))) files
     else {
       // the underscore prefix hides the manifest from Spark's file
       // listings (that's the point) — load bytes via the FS API
-      val stats = parseManifest(manifestLines(fact))
+      val stats = parseManifest(manifestLines(statsPath(fact)))
       // a manifest that does not cover `column` (collected for other
-      // columns, or empty) can prune nothing — full listing, same
-      // contract as no manifest at all
+      // columns, or empty) can prune nothing
       val covered = Seq("file", s"min_$column", s"max_$column")
         .forall(stats.schema.fieldNames.contains)
-      if (!covered) dataFiles(fact).map(_.toString)
+      if (!covered) files
       else {
-        val disjoint = coalesce(col(s"max_$column") < lit(lo), lit(false)) ||
-          coalesce(col(s"min_$column") > lit(hi), lit(false))
+        val disjoint = ranges.map { case (lo, hi) =>
+          coalesce(col(s"max_$column") < lit(lo), lit(false)) ||
+            coalesce(col(s"min_$column") > lit(hi), lit(false))
+        }.reduce(_ && _)
         val pruned = stats.filter(disjoint).select(col("file"))
           .collect().map(r => normFile(r.getString(0))).toSet
-        dataFiles(fact).map(_.toString)
-          .filter(p => !pruned.contains(normFile(p)))
+        files.filterNot(e => pruned.contains(normFile(fact, e)))
       }
     }
 
@@ -1104,25 +1008,17 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       k: Int = 4): Unit =
     read(fact).foreach(df => writeBloom(fact, df, column, bits, k, Nil))
 
-  /** Incremental manifest refresh after appends: scan only the data
-    * files the manifest does not cover (same cadence contract as
-    * [[refreshStats]]). A manifest built with different column/bits/k
-    * parameters is rebuilt from scratch. */
+  /** Incremental manifest refresh after appends: scan only the live files
+    * the manifest does not cover, and drop the entries of files the fact
+    * no longer has (same contract as [[refreshStats]]). A manifest built
+    * with different column/bits/k parameters is rebuilt from scratch. */
   def refreshBloom(fact: String, column: String, bits: Int = 1 << 13,
       k: Int = 4): Unit = {
     if (!fs.exists(bloomPath(fact))) { collectBloom(fact, column, bits, k); return }
-    val entries = bloomEntries(fact)
-    val compatible = entries.forall(e =>
+    val compatible = bloomEntries(fact).forall(e =>
       e.col == column && e.bits == bits && e.k == k)
     if (!compatible) { collectBloom(fact, column, bits, k); return }
-    val known = entries.map(e => normFile(e.file)).toSet
-    val newFiles = dataFiles(fact).map(_.toString)
-      .filterNot(p => known.contains(normFile(p)))
-    if (newFiles.isEmpty) return
-    val reader = spark.read.option("basePath", path(fact).toString)
-    val df = storedSchema(fact).map(reader.schema).getOrElse(reader)
-      .parquet(newFiles: _*)
-    writeBloom(fact, df, column, bits, k, manifestLines0(bloomPath(fact)))
+    refreshManifest(fact, bloomPath(fact))(writeBloom(fact, _, column, bits, k, _))
   }
 
   private def writeBloom(fact: String, df: DataFrame, column: String,
@@ -1150,14 +1046,8 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
   private case class BloomEntry(file: String, col: String, bits: Int,
       k: Int, words: Array[Long])
 
-  private def manifestLines0(at: Path): Seq[String] = {
-    val in = fs.open(at)
-    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    txt.split("\n").toSeq.filter(_.nonEmpty)
-  }
-
   private def bloomEntries(fact: String): Seq[BloomEntry] = {
-    val df = parseManifest(manifestLines0(bloomPath(fact)))
+    val df = parseManifest(manifestLines(bloomPath(fact)))
     df.select(col("file"), col("col"), col("bits").cast("int"),
         col("k").cast("int"), col("words"))
       .collect().map { r =>
@@ -1181,75 +1071,124 @@ final class Warehouse(spark: SparkSession, val root: String) extends FactStore {
       s"bloom probe supports integral/string/boolean keys, got ${other.getClass.getSimpleName}")
   }
 
-  /** Files an equality probe `column = value` must scan: every current
-    * data file EXCEPT those proven empty by EITHER sidecar — the bloom
-    * filter (membership) or the zone map (range [value, value]); the
-    * sharper manifest wins, and a clustered layout prunes by range even
-    * when its bloom is saturated. Files either manifest doesn't cover
-    * (newer than the last refresh) and facts with no/incompatible
-    * manifests always return the full listing — skipping is an
-    * optimization, never a filter. */
-  def filesForEquals(fact: String, column: String, value: Any): Seq[String] = {
-    val key = sparkKeyString(value)
-    val inRange = filesForRange(fact, column, value, value).toSet
-    val all = dataFiles(fact).map(_.toString).filter(inRange.contains)
-    if (!fs.exists(bloomPath(fact))) return all
-    val entries = bloomEntries(fact).filter(_.col == column)
-    if (entries.isEmpty) return all
-    val absent = entries.filterNot(e =>
-        graft.ext.BloomJoin.mightContain(key, e.words, e.bits, e.k))
-      .map(e => normFile(e.file)).toSet
-    all.filter(p => !absent.contains(normFile(p)))
-  }
+  /** Files an equality probe `column = value` must scan: [[filesForIn]]
+    * with one value. */
+  def filesForEquals(fact: String, column: String, value: Any): Seq[String] =
+    filesForIn(fact, column, Seq(value))
 
   /** Read the fact restricted to `column = value`, skipping every file
     * either sidecar (bloom membership, zone-map range) proves empty.
     * EXACT under stale manifests: uncovered files are always read and
     * the row-level predicate is re-applied after the file-level skip. */
   def readEquals(fact: String, column: String, value: Any): Option[DataFrame] =
-    prunedRead(fact, col(column) === lit(value),
-      filesForEquals(fact, column, value))
+    prunedRead(fact, col(column) === lit(value), inValues(fact, _, column, Seq(value)))
 
-  /** Files an IN-list probe must scan: a file survives if EITHER
-    * sidecar admits ANY of the values (union of the per-value survivor
-    * sets, each the bloom ∩ zone-map intersection, from one manifest
-    * read). Same exactness contract as [[filesForEquals]]. */
-  def filesForIn(fact: String, column: String, values: Seq[Any]): Seq[String] = {
-    require(values.nonEmpty, "filesForIn needs at least one value")
+  /** Files an IN-list probe must scan: every live data file EXCEPT those
+    * proven empty by EITHER sidecar — the zone map (no value's point
+    * range overlaps the file) or the bloom filter (no value's key is a
+    * member); the sharper manifest wins, and a clustered layout prunes by
+    * range even when its bloom is saturated. Files a manifest does not
+    * cover (newer than the last refresh) and facts with no/incompatible
+    * manifests keep every file — skipping is an optimization, never a
+    * filter. */
+  def filesForIn(fact: String, column: String, values: Seq[Any]): Seq[String] =
+    survivors(fact)(inValues(fact, _, column, values))
+
+  private def inValues(fact: String, v: Version, column: String,
+      values: Seq[Any]): Seq[Entry] = {
+    require(values.nonEmpty, "an IN probe needs at least one value")
     val keys = values.map(sparkKeyString)
-    val inRange = values.map(v => filesForRange(fact, column, v, v).toSet)
-      .reduce(_ ++ _)
-    val all = dataFiles(fact).map(_.toString).filter(inRange.contains)
-    if (!fs.exists(bloomPath(fact))) return all
-    val entries = bloomEntries(fact).filter(_.col == column)
-    if (entries.isEmpty) return all
-    val absent = entries.filterNot(e => keys.exists(k =>
-        graft.ext.BloomJoin.mightContain(k, e.words, e.bits, e.k)))
-      .map(e => normFile(e.file)).toSet
-    all.filter(p => !absent.contains(normFile(p)))
+    val ranged = inRanges(fact, v.files, column, values.map(x => x -> x))
+    if (!fs.exists(bloomPath(fact))) ranged
+    else {
+      val absent = bloomEntries(fact).filter(_.col == column)
+        .filterNot(e => keys.exists(k =>
+          graft.ext.BloomJoin.mightContain(k, e.words, e.bits, e.k)))
+        .map(e => normFile(e.file)).toSet
+      ranged.filterNot(e => absent.contains(normFile(fact, e)))
+    }
   }
 
   /** Read the fact restricted to `column IN (values)` with bloom file
     * skipping — the multi-tenant/point-lookup batch form. */
-  def readIn(fact: String, column: String, values: Seq[Any]): Option[DataFrame] = {
-    require(values.nonEmpty, "readIn needs at least one value")
-    prunedRead(fact, col(column).isin(values: _*),
-      filesForIn(fact, column, values))
+  def readIn(fact: String, column: String, values: Seq[Any]): Option[DataFrame] =
+    prunedRead(fact, col(column).isin(values: _*), inValues(fact, _, column, values))
+
+  /** Qualified paths of the newest version's files that `pick` keeps. */
+  private def survivors(fact: String)(pick: Version => Seq[Entry]): Seq[String] = {
+    val base = fs.makeQualified(path(fact))
+    latest(fact).toSeq.flatMap(pick).map(e => new Path(base, e.rel).toString)
   }
 
+  /** The one pruned read: the newest version's relation over the files
+    * `pick` keeps, with the row predicate re-applied. */
   private def prunedRead(fact: String, pred: Column,
-      files: => Seq[String]): Option[DataFrame] =
-    read(fact).map { full =>
-      // no sidecar at all -> the thunk returns the full listing anyway;
-      // short-circuit to the plain filtered read (no per-file binding)
-      if (!fs.exists(bloomPath(fact)) && !fs.exists(statsPath(fact)))
-        full.filter(pred)
-      else files match {
-        case Nil => full.filter(pred).limit(0)
-        case fs0 =>
-          val reader = spark.read.option("basePath", path(fact).toString)
-          storedSchema(fact).map(reader.schema).getOrElse(reader)
-            .parquet(fs0: _*).filter(pred)
+      pick: Version => Seq[Entry]): Option[DataFrame] =
+    latest(fact).map(v => relation(fact, v.schema, pick(v)).filter(pred))
+}
+
+object Warehouse {
+  private val mapper = new ObjectMapper()
+
+  /** One data file of a version: its path under the fact dir, its `year`
+    * (None for Spark's null partition), size and mtime. */
+  private case class Entry(rel: String, year: Option[Long], size: Long, mtime: Long)
+
+  /** One committed version: the full state of the fact. */
+  private case class Version(v: Long, schema: StructType, files: Seq[Entry],
+      erased: Seq[String]) {
+    def json: String = {
+      val o = mapper.createObjectNode()
+      o.put("version", v)
+      o.set[ObjectNode]("schema", mapper.readTree(schema.json))
+      val fs = o.putArray("files")
+      files.foreach { e =>
+        val f = fs.addObject().put("path", e.rel)
+        e.year.fold(f.putNull("year"))(y => f.put("year", y))
+        f.put("size", e.size).put("mtime", e.mtime)
       }
+      val er = o.putArray("erased")
+      erased.foreach(s => er.add(s))
+      mapper.writeValueAsString(o)
     }
+  }
+
+  private def parseVersion(v: Long, txt: String): Version = {
+    val n = mapper.readTree(txt)
+    Version(v, DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType],
+      n.get("files").elements().asScala.map { f =>
+        Entry(f.get("path").asText(),
+          Option(f.get("year")).filterNot(_.isNull).map(_.asLong()),
+          f.get("size").asLong(), f.get("mtime").asLong())
+      }.toSeq,
+      n.get("erased").elements().asScala.map(_.asText()).toSeq)
+  }
+
+  /** The `year` of a `year=Y` partition dir name. */
+  private def yearOf(dir: String): Option[Long] =
+    dir.stripPrefix("year=") match {
+      case "__HIVE_DEFAULT_PARTITION__" => None
+      case y => Some(y.toLong)
+    }
+
+  /** A file index over a fixed file list, each file with its `year` — the
+    * commit-log analog of Spark's own `MetadataLogFileIndex`. Nothing is
+    * listed: the partition spec and the per-directory file map come from
+    * the entries. */
+  private final class LogFileIndex(spark: SparkSession, root: Path,
+      partSchema: StructType, files: Seq[(FileStatus, Option[Long])])
+      extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+    override val rootPaths: Seq[Path] = Seq(root)
+    override protected val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
+      mutable.LinkedHashMap(files.map(f => f._1.getPath -> f._1): _*)
+    override protected val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+      files.map(_._1).toArray.groupBy(_.getPath.getParent)
+    private val spec = PartitionSpec(partSchema,
+      files.groupBy(_._1.getPath.getParent).toSeq.map { case (dir, fs) =>
+        PartitionPath(InternalRow(fs.head._2.map(y =>
+          Cast(Literal(y), partSchema.head.dataType, Some("UTC")).eval()).orNull), dir)
+      })
+    override def partitionSpec(): PartitionSpec = spec
+    override def refresh(): Unit = ()
+  }
 }

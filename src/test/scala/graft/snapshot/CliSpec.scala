@@ -57,4 +57,19 @@ class CliSpec extends SparkTestBase {
     wh.drop("f")
     assert(wh.read("f").isEmpty)
   }
+
+  test("delete: refused while another holder has the fact's writer lease") {
+    val wh = new Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("cli_lease_wh").toString)
+    wh.append("f", Seq((1L, 2022L), (2L, 2023L)).toDF("k", "year"))
+    val token = wh.acquireWriterLease("f", holder = "cron-add")
+    Seq(Nil, Seq(2022L)).foreach { years =>
+      val e = intercept[IllegalStateException](SnapshotCli.delete(wh, "f", years))
+      assert(e.getMessage.contains("cron-add"))
+    }
+    assert(wh.read("f").get.count() == 2)
+    wh.releaseWriterLease("f", token)
+    assert(SnapshotCli.delete(wh, "f", Seq(2022L)).contains("2022"))
+    assert(wh.read("f").get.select("k").as[Long].collect().toSeq == Seq(2L))
+  }
 }

@@ -50,53 +50,35 @@ class PurgeSpec extends SparkTestBase {
     assert(e.getMessage.contains("exactly one column"))
   }
 
-  test("vacuum rolls a crashed purge FORWARD: no resurrection of erased rows") {
-    // Simulated crash state halfway through a purge of k=1 over years
-    // 2020 (partial erase, crashed BETWEEN stage-out and swap-in: live dir
-    // missing, old copy displaced, purged copy staged) and 2022 (full
-    // erase, crashed BEFORE stage-out: live dir still holds the subject).
-    val wh = new Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("purge_crash").toString)
+  test("crash after a purge's commit, before its deletes, with a tag " +
+      "pinning the erased files: vacuum deletes them and readTag fails loudly") {
+    spark.sparkContext.hadoopConfiguration.set("fs.crash.impl", classOf[CrashFs].getName)
+    val dir = graft.TempDirs.scratchDir("purge_crash").toFile
+    val wh = new Warehouse(spark, s"crash://$dir")
     wh.append("f", Seq(
       (1L, 10.0, 2020L), (2L, 20.0, 2020L),
       (3L, 30.0, 2021L),
       (1L, 40.0, 2022L)).toDF("k", "v", "year"))
-    val root = new java.io.File(wh.root)
-    // staged purged copy of year=2020 (what swapYearPartitions writes)
-    Seq((2L, 20.0, 2020L)).toDF("k", "v", "year")
-      .repartition(1).write.partitionBy("year")
-      .parquet(s"${root}/f.purge")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${root}/f.purge/_purge_years.json"),
-      "[2020,2022]")
-    // displace year=2020 out (stage-out done), leave year=2022 in place
-    new java.io.File(s"${root}/f.purge.old").mkdirs()
-    assert(new java.io.File(s"${root}/f/year=2020")
-      .renameTo(new java.io.File(s"${root}/f.purge.old/year=2020")))
-
+    wh.tag("f", "v1")
+    val pinned2020 = CrashFs.dataFiles(dir, "f").filter(_.startsWith("year=2020/"))
+    CrashFs.armedDelete = Some(".parquet")
+    try intercept[java.io.IOException](wh.purgeKeys("f", "k", Seq(1L)))
+    finally CrashFs.armedDelete = None
+    val purged = Set((2L, 20.0, 2020L), (3L, 30.0, 2021L))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v", "year").as[(Long, Double, Long)].collect().toSet
+    // committed: readers already see the purge
+    assert(rows(wh.read("f").get) == purged)
+    // the erased files are still on disk, and the tag still pins them
+    assert(pinned2020.subsetOf(CrashFs.dataFiles(dir, "f")))
     wh.vacuum("f")
-    val left = wh.read("f").get.select("k", "v", "year").as[(Long, Double, Long)]
-      .collect().toSet
-    // k=1 stays erased from BOTH crash windows; untouched year intact
-    assert(left == Set((2L, 20.0, 2020L), (3L, 30.0, 2021L)))
-    assert(!new java.io.File(s"${root}/f/year=2022").exists())
-    // staging fully cleared
-    assert(!new java.io.File(s"${root}/f.purge").exists())
-    assert(!new java.io.File(s"${root}/f.purge.old").exists())
-    // and vacuum stays a no-op on the now-healthy fact
-    wh.vacuum("f")
-    assert(wh.read("f").get.count() == 2)
-  }
-
-  test("vacuum clears purge staging from a crash during the staged write") {
-    // marker absent -> the live table was never touched; staging is junk
-    val wh = new Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("purge_crash2").toString)
-    wh.append("f", Seq((1L, 1.0, 2020L)).toDF("k", "v", "year"))
-    new java.io.File(s"${wh.root}/f.purge/year=2020").mkdirs()
-    wh.vacuum("f")
-    assert(!new java.io.File(s"${wh.root}/f.purge").exists())
-    assert(wh.read("f").get.count() == 1)
+    val left = CrashFs.dataFiles(dir, "f")
+    assert(pinned2020.intersect(left).isEmpty)
+    assert(!left.exists(_.startsWith("year=2022/")))
+    assert(!new java.io.File(dir, "f/year=2022").exists())
+    val e = intercept[java.io.IOException] { wh.readTag("f", "v1") }
+    assert(e.getMessage.contains("no longer exists"))
+    assert(rows(wh.read("f").get) == purged)
   }
 
   test("purgeKeys: NULL keys never match a purge list and are kept") {

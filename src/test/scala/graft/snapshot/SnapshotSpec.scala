@@ -317,6 +317,18 @@ class SnapshotSpec extends SparkTestBase {
     }
   }
 
+  test("zOrderBy ranks an all-null column 0 and leaves an empty fact empty") {
+    val wh = freshWarehouse()
+    wh.append("z", spark.range(20).select(col("id").as("a"),
+      lit(null).cast("long").as("b"), lit(2024L).as("year")))
+    wh.zOrderBy("z", "a", "b", targetFiles = 2)
+    assert(wh.read("z").get.select("a").as[Long].collect().toSet == (0L until 20L).toSet)
+    wh.purgeKeys("z", "year", Seq(2024L))
+    assert(wh.read("z").get.count() == 0)
+    wh.zOrderBy("z", "a", "b", targetFiles = 2)
+    assert(wh.read("z").get.count() == 0)
+  }
+
   test("disabled queries never run") {
     val wh = freshWarehouse()
     val st = SnapshotJob.Settings(Seq(SnapshotJob.FactConfig("f", Cron.Daily,
@@ -417,78 +429,77 @@ class VacuumSpec extends graft.SparkTestBase {
   import spark.implicits._
   import org.apache.spark.sql.functions._
 
-  private def freshWh() =
-    new Warehouse(spark, graft.TempDirs.scratchDir("vac_wh").toString)
-
-  private def mv(wh: Warehouse, from: String, to: String): Unit =
-    assert(new java.io.File(wh.root, from).renameTo(new java.io.File(wh.root, to)))
-
-  test("vacuum completes a rewrite crashed between the two renames") {
-    val wh = freshWh()
-    wh.append("v", Seq((1L, 2024L)).toDF("k", "year"))
-    // simulate replaceWith crashing after staging out the live dir: the
-    // complete rewrite sits in .tmp, the original in .old, no live fact
-    mv(wh, "v", "v.tmp")
-    val f = new java.io.File(wh.root, "v.old"); f.mkdirs()
-    assert(wh.read("v").isEmpty)
-    wh.vacuum("v")
-    assert(wh.read("v").get.select("k").as[Long].collect().toSeq == Seq(1L))
-    assert(!new java.io.File(wh.root, "v.tmp").exists())
-    assert(!new java.io.File(wh.root, "v.old").exists())
+  /** A fresh warehouse under the crash-injecting `crash:` scheme. */
+  private def crashWh(): (java.io.File, Warehouse) = {
+    spark.sparkContext.hadoopConfiguration.set("fs.crash.impl", classOf[CrashFs].getName)
+    val dir = graft.TempDirs.scratchDir("vac_crash").toFile
+    (dir, new Warehouse(spark, s"crash://$dir"))
   }
 
-  test("vacuum rolls back to the original when no staged rewrite exists") {
-    val wh = freshWh()
-    wh.append("vr", Seq((2L, 2024L)).toDF("k", "year"))
-    mv(wh, "vr", "vr.old")
-    wh.vacuum("vr")
-    assert(wh.read("vr").get.select("k").as[Long].collect().toSeq == Seq(2L))
-  }
+  private def rows(wh: Warehouse, fact: String) =
+    wh.read(fact).get.select("a", "b", "year").as[(Long, Long, Long)].collect().toSet
 
-  test("vacuum restores partitions displaced by a crashed merge") {
-    val wh = freshWh()
-    wh.append("vm", Seq((1L, "a", 2023L), (2L, "b", 2024L)).toDF("k", "v", "year"))
-    // simulate a merge crash after renaming year=2023 out but before the
-    // merged copy swapped in
-    new java.io.File(wh.root, "vm.merge.old").mkdirs()
-    mv(wh, "vm/year=2023", "vm.merge.old/year=2023")
-    assert(wh.read("vm").get.count() == 1)
-    wh.vacuum("vm")
-    val got = wh.read("vm").get.select("k", "v").as[(Long, String)].collect().toSet
-    assert(got == Set((1L, "a"), (2L, "b")))
-    assert(!new java.io.File(wh.root, "vm.merge.old").exists())
+  private val seed = Seq((1L, 5L, 2024L), (4L, 6L, 2024L), (2L, 3L, 2023L))
+
+  test("crash after the data is written, before the commit: reads are " +
+      "unchanged and vacuum leaves no file outside the live version") {
+    val mutations = Seq[(String, Warehouse => Unit)](
+      "append" -> (_.append("r", Seq((9L, 9L, 2024L)).toDF("a", "b", "year"))),
+      "overwrite" -> (_.overwrite("r", Seq((3L, 1L, 2024L)).toDF("a", "b", "year"))),
+      "compact" -> (_.compact("r")),
+      "merge" -> (_.merge("r", Seq((1L, 7L, 2024L)).toDF("a", "b", "year"), Seq("a"))),
+      "purgeKeys" -> (_.purgeKeys("r", "a", Seq(1L))))
+    mutations.foreach { case (name, mutate) =>
+      val (dir, wh) = crashWh()
+      wh.append("r", seed.toDF("a", "b", "year"))
+      // the process dies as it creates version 1: its data files are in
+      // place, nothing references them
+      CrashFs.armed = Some("_1.json")
+      try intercept[java.io.IOException](mutate(wh)) finally CrashFs.armed = None
+      assert(rows(wh, "r") == seed.toSet, name)
+      assert(CrashFs.dataFiles(dir, "r").size > liveFiles(wh, "r").size, name)
+      wh.vacuum("r")
+      assert(CrashFs.dataFiles(dir, "r") == liveFiles(wh, "r"), name)
+      assert(!new java.io.File(dir, "r/_staging").exists(), name)
+      assert(rows(wh, "r") == seed.toSet, name)
+    }
   }
 
   test("vacuum rolls every rewrite forward and leaves no staging copy") {
-    spark.sparkContext.hadoopConfiguration.set("fs.crash.impl", classOf[CrashFs].getName)
     val rewrites = Seq[(String, Warehouse => Unit)](
       "overwrite" -> (_.overwrite("r", Seq((3L, 1L, 2024L)).toDF("a", "b", "year"))),
       "compact" -> (_.compact("r")),
       "optimize" -> (_.optimize("r", Seq("a"), targetFiles = 2)),
-      "zOrderBy" -> (_.zOrderBy("r", "a", "b", targetFiles = 2)))
+      "zOrderBy" -> (_.zOrderBy("r", "a", "b", targetFiles = 2)),
+      "merge" -> (_.merge("r", Seq((1L, 5L, 2024L)).toDF("a", "b", "year"), Seq("a"))))
     rewrites.foreach { case (name, rewrite) =>
-      val dir = graft.TempDirs.scratchDir("vac_crash").toFile
-      val wh = new Warehouse(spark, s"crash://$dir")
-      wh.append("r", Seq((1L, 5L, 2024L), (2L, 3L, 2023L)).toDF("a", "b", "year"))
-      // crash between replaceWith's two renames: the live dir is already
-      // out at r.old and the complete rewrite is still staged
-      CrashFs.armed = Some("r")
-      try intercept[java.io.IOException](rewrite(wh)) finally CrashFs.armed = None
-      assert(!new java.io.File(dir, "r").exists(), name)
+      val (dir, wh) = crashWh()
+      wh.append("r", seed.toDF("a", "b", "year"))
+      // crash after the rewrite's commit, before it deletes the old files
+      CrashFs.armedDelete = Some(".parquet")
+      try intercept[java.io.IOException](rewrite(wh))
+      finally CrashFs.armedDelete = None
+      val want = if (name == "overwrite") Set((3L, 1L, 2024L)) else seed.toSet
+      assert(rows(wh, "r") == want, name)
+      assert(CrashFs.dataFiles(dir, "r").size > liveFiles(wh, "r").size, name)
       wh.vacuum("r")
-      val left = dir.list().filter(_.startsWith("r."))
-      assert(left.isEmpty, s"$name left ${left.mkString(", ")}")
-      val rows = wh.read("r").get.select("a").as[Long].collect().toSet
-      assert(rows == (if (name == "overwrite") Set(3L) else Set(1L, 2L)), name)
+      assert(CrashFs.dataFiles(dir, "r") == liveFiles(wh, "r"), name)
+      assert(dir.list().forall(n => n == "r" || n == "_locks"), name)
+      assert(rows(wh, "r") == want, name)
     }
   }
 
   test("vacuum is a no-op on a healthy fact") {
-    val wh = freshWh()
+    val wh = new Warehouse(spark, graft.TempDirs.scratchDir("vac_wh").toString)
     wh.append("vh", Seq((1L, 2024L)).toDF("k", "year"))
     wh.vacuum("vh")
     assert(wh.read("vh").get.count() == 1)
   }
+
+  /** The live version's data files, relative to the fact dir. */
+  private def liveFiles(wh: Warehouse, fact: String): Set[String] =
+    wh.filesForRange(fact, "a", Long.MinValue, Long.MaxValue)
+      .map(p => p.substring(p.indexOf("/year=") + 1)).toSet
 }
 
 class RetentionSpec extends graft.SparkTestBase {
@@ -506,9 +517,10 @@ class RetentionSpec extends graft.SparkTestBase {
   }
 }
 
-/** The local filesystem under the `crash:` scheme, except that a rename
-  * onto a path named [[CrashFs.armed]] throws before anything moves, as
-  * if the process died there. */
+/** The local filesystem under the `crash:` scheme, except that it throws
+  * before anything moves, as if the process died there, on a rename onto a
+  * path named [[CrashFs.armed]] or on deleting a path whose name ends with
+  * [[CrashFs.armedDelete]]. */
 class CrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("crash:///")
   override def getScheme: String = "crash"
@@ -517,8 +529,21 @@ class CrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     if (CrashFs.armed.contains(dst.getName))
       throw new java.io.IOException(s"crashed before renaming $src to $dst")
     else super.rename(src, dst)
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    if (CrashFs.armedDelete.exists(p.getName.endsWith))
+      throw new java.io.IOException(s"crashed before deleting $p")
+    else super.delete(p, recursive)
 }
 
 object CrashFs {
   @volatile var armed: Option[String] = None
+  @volatile var armedDelete: Option[String] = None
+
+  /** Data files under `dir/fact`'s `year=` dirs, relative to the fact. */
+  def dataFiles(dir: java.io.File, fact: String): Set[String] =
+    Option(new java.io.File(dir, fact).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("year=")).flatMap { y =>
+        y.list().toSeq.filterNot(n => n.startsWith(".") || n.startsWith("_"))
+          .map(n => s"${y.getName}/$n")
+      }.toSet
 }

@@ -4,9 +4,10 @@ import graft.SparkTestBase
 
 import org.apache.spark.sql.functions._
 
-/** Snapshot tags: zero-copy pinning that survives appends and every
-  * rewrite; expire + vacuum reclaims; purge scrubs (erasure outranks
-  * reproducibility); untagged facts keep plain-delete behavior. */
+/** Snapshot tags: a pinned version that survives appends and every
+  * rewrite; expire + vacuum reclaims; purge erases pinned files too
+  * (erasure outranks reproducibility); untagged facts keep plain-delete
+  * behavior. */
 class TimeTravelSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -15,6 +16,11 @@ class TimeTravelSpec extends SparkTestBase {
 
   private def rows(wh: Warehouse, df: org.apache.spark.sql.DataFrame) =
     df.select("k", "v", "year").as[(Long, Double, Long)].collect().toSet
+
+  /** Data files on disk vs. files of the live version. */
+  private def onDisk(wh: Warehouse) = CrashFs.dataFiles(new java.io.File(wh.root), "f").size
+  private def live(wh: Warehouse) =
+    wh.filesForRange("f", "k", Long.MinValue, Long.MaxValue).size
 
   test("tag survives append + compact + optimize + merge; reads exact pinned rows") {
     val wh = freshWh()
@@ -39,19 +45,18 @@ class TimeTravelSpec extends SparkTestBase {
       org.apache.spark.sql.types.LongType)
   }
 
-  test("expire + vacuumRetired reclaims; readTag then fails precisely") {
+  test("expire + vacuum reclaims; readTag then fails precisely") {
     val wh = freshWh()
     wh.append("f", Seq((1L, 1.0, 2020L)).toDF("k", "v", "year"))
     wh.tag("f", "v1")
     wh.append("f", Seq((2L, 2.0, 2020L)).toDF("k", "v", "year"))
     wh.compact("f")
-    val retired = new java.io.File(s"${wh.root}/f/_retired")
-    assert(retired.exists()) // displaced files retired, not deleted
+    assert(onDisk(wh) > live(wh)) // v1's files kept for the tag, not deleted
     // a second tag pinning the CURRENT files keeps them through vacuum
     wh.tag("f", "v2")
     wh.expireTag("f", "v1")
-    wh.vacuumRetired("f")
-    assert(!retired.exists()) // v1's retired files reclaimed
+    wh.vacuum("f")
+    assert(onDisk(wh) == live(wh)) // v1's files reclaimed
     val e = intercept[IllegalArgumentException] { wh.readTag("f", "v1") }
     assert(e.getMessage.contains("v1"))
     assert(rows(wh, wh.readTag("f", "v2")) ==
@@ -63,10 +68,9 @@ class TimeTravelSpec extends SparkTestBase {
     wh.append("f", Seq((1L, 1.0, 2020L)).toDF("k", "v", "year"))
     wh.tag("f", "old-run")
     wh.append("f", Seq((2L, 2.0, 2020L)).toDF("k", "v", "year"))
-    wh.compact("f") // displaces files -> retired (old-run pins them)
+    wh.compact("f") // old-run pins the files compact dropped
     wh.tag("f", "fresh-run")
-    val retired = new java.io.File(s"${wh.root}/f/_retired")
-    assert(retired.exists())
+    assert(onDisk(wh) > live(wh))
     // nothing is old enough at a 30-day horizon -> no-op
     assert(wh.expireTags("f", 30).isEmpty)
     assert(wh.tags("f") == Seq("fresh-run", "old-run"))
@@ -75,7 +79,7 @@ class TimeTravelSpec extends SparkTestBase {
     val future = System.currentTimeMillis() + 40L * 86400000L
     assert(wh.expireTags("f", 30, future) == Seq("fresh-run", "old-run"))
     assert(wh.tags("f").isEmpty)
-    assert(!retired.exists())
+    assert(onDisk(wh) == live(wh))
     // live fact untouched by retention
     assert(wh.read("f").get.count() == 2)
     // no tags dir / fresh fact: clean no-op
@@ -87,7 +91,7 @@ class TimeTravelSpec extends SparkTestBase {
     wh.append("f", Seq((1L, 1.0, 2020L)).toDF("k", "v", "year"))
     wh.append("f", Seq((2L, 2.0, 2020L)).toDF("k", "v", "year"))
     wh.compact("f")
-    assert(!new java.io.File(s"${wh.root}/f/_retired").exists())
+    assert(onDisk(wh) == live(wh))
   }
 
   test("purge scrubs retired copies: erasure outranks reproducibility") {
@@ -95,11 +99,11 @@ class TimeTravelSpec extends SparkTestBase {
     wh.append("f", Seq((1L, 1.0, 2020L), (2L, 2.0, 2020L), (3L, 3.0, 2021L))
       .toDF("k", "v", "year"))
     wh.tag("f", "v1")
-    wh.compact("f") // v1's 2020+2021 files now retired
+    wh.compact("f") // v1 pins the 2020+2021 files compact dropped
     wh.purgeKeys("f", "k", Seq(1L))
     // live table correct
     assert(rows(wh, wh.read("f").get) == Set((2L, 2.0, 2020L), (3L, 3.0, 2021L)))
-    // the purged year's retired copies are gone -> the tag fails loudly
+    // the purged year's pinned files are gone -> the tag fails loudly
     val e = intercept[java.io.IOException] { wh.readTag("f", "v1").collect() }
     assert(e.getMessage.contains("purged") || e.getMessage.contains("no longer"))
   }

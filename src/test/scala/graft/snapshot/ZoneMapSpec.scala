@@ -3,6 +3,8 @@ package graft.snapshot
 import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 class ZoneMapSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -50,6 +52,27 @@ class ZoneMapSpec extends SparkTestBase {
     val all = wh.filesForRange(f, "k", Long.MinValue, Long.MaxValue)
     assert(wh.filesForRange(f, "year", 2020L, 2020L).size == all.size)
     assert(wh.readRange(f, "year", 2021L, 2021L).get.count() == 5000L)
+  }
+
+  test("refreshStats after a rewrite keeps one manifest line per live file") {
+    val wh = new Warehouse(spark, TempDirs.scratchDir("graft_zm_gc").toString)
+    wh.append("f", spark.range(100).select(col("id").as("k"),
+      (lit(2020L) + col("id") % 2).as("year")).repartition(3))
+    wh.collectStats("f", Seq("k"))
+    def check(after: String): Unit = {
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(wh.root, "f", "_stats.json")).asScala.filter(_.nonEmpty)
+      val live = wh.filesForRange("f", "k", Long.MinValue, Long.MaxValue)
+      assert(lines.size == live.size,
+        s"after $after: ${lines.size} lines for ${live.size} live files")
+    }
+    wh.compact("f")
+    wh.refreshStats("f", Seq("k"))
+    check("compact")
+    // a partition-scoped rewrite replaces only the 2020 files
+    wh.merge("f", Seq((0L, 2020L)).toDF("k", "year"), Seq("k"))
+    wh.refreshStats("f", Seq("k"))
+    check("merge")
   }
 
   test("refreshStats covers appended files without rescanning old ones") {
